@@ -231,8 +231,9 @@ object Graph extends QueryModule {
       .select(least(col("x"), col("y")).as("a"),
         greatest(col("x"), col("y")).as("b"))
       .distinct()
-    val deg = und.select(col("a").as("node"))
-      .union(und.select(col("b").as("node")))
+    // one explode, not a union of two projections: a union re-runs
+    // und's distinct once per branch
+    val deg = und.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val withDeg = und
       .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
@@ -257,9 +258,9 @@ object Graph extends QueryModule {
     val tri = wedges.join(
       oriented.select(col("src").as("v"), col("dst").as("w")),
       Seq("v", "w"), "left_semi")
-    tri.select(col("apex").as("node"))
-      .union(tri.select(col("v").as("node")))
-      .union(tri.select(col("w").as("node")))
+    // each triangle credits its three nodes from ONE pass over tri: a
+    // three-branch union would run the wedge and closing joins per branch
+    tri.select(explode(array(col("apex"), col("v"), col("w"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("triangles"))
   }
 
@@ -302,13 +303,12 @@ object Graph extends QueryModule {
     else adj.select(col("u"), col("v"))
   }
 
-  /** Exact lineitem row count for this dir — a parquet footer-metadata
-    * aggregate (zero data pages), memoized per dir so the graph family's
-    * repeated `coLineAdj`/`edgeWidth` calls pay it once per corpus.
+  /** Exact lineitem row count for this dir — memoized with the table's
+    * resolved version, so the graph family's repeated
+    * `coLineAdj`/`edgeWidth` calls pay it once per corpus.
     */
-  private val liRows = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def liRowCount(s: SparkSession, d: String): Long =
-    liRows.computeIfAbsent(d, _ => Tables.lineitem(s, d).count()).longValue
+    Tables.rowCount(s, d, "lineitem")
 
   /** Width for an exchange carrying the co-line EDGE mass (≈ one edge
     * per lineitem row) — shared by the downstream edge-dedup/symmetrize
