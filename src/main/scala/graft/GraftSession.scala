@@ -42,22 +42,19 @@ object GraftSession {
       // identical WholeStageCodegen sources — thread-sampling the bench
       // showed Class.forName as a top executor frame. Scale-neutral:
       // sized to the registry, not to the host.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // Below the threshold the bypass shuffle writer creates R temp
       // files per map task; with the engine's sized small-R exchanges
       // that is O(tasks·R) file creations per stage (top sampled frames:
       // FileOutputStream.open / writeMetadataFileAndCommit). The sort
       // writer buffers and writes ONE file per task. At cluster scale
-      // sized exchanges exceed any such threshold, so the knob only
-      // affects small-R stages — parameterised with a local default.
+      // sized exchanges exceed any such threshold, so the setting only
+      // affects small-R stages.
       // Tradeoff (ADVICE r11): for genuinely tiny-R shuffles the sort/
       // serialized writer adds per-record buffering the bypass writer
       // avoids — full-bench A/B at 32 threads (r12) measured the sort
-      // writer still ahead; a workload dominated by tiny-R shuffles of
-      // FEW rows should override back via SPARK_GRAFT_BYPASS_MERGE.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
+      // writer still ahead.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       // Spark 4 gives every session an isolated artifact classloader;
       // with it on, EVERY task's closure deserialization routes
       // Class.forName through ExecutorClassLoader, and any name the
@@ -69,26 +66,30 @@ object GraftSession {
       // engine registers no session artifacts (no REPL, no Connect, no
       // addArtifact), so isolation buys nothing: off restores the
       // plain app-classloader chain whose misses fail fast and local.
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISOLATION", "false"))
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k=v": runtime session confs for bench/scale
-    // runs (e.g. spark.graft.ann.ivfCells when measuring the K ∝ n
-    // contract at 10×). Verify independently REFUSES to run with any
-    // oracle-pinned knob set, so this cannot poison the hash gate.
-    sys.env.get("SPARK_GRAFT_CONF").foreach { raw =>
-      raw.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.trim.nonEmpty => s.conf.set(k.trim, v.trim)
-          case _ => sys.error(s"SPARK_GRAFT_CONF entry not k=v: '$kv'")
-        }
-      }
-    }
+    sys.env.get("SPARK_GRAFT_CONF").foreach(applyConf(s, _))
     s
   }
+
+  /** `SPARK_GRAFT_CONF="k=v;k=v"`: runtime session confs for bench/scale
+    * runs (e.g. the IVF cell count when measuring the K ∝ n contract at
+    * 10×). A `spark.graft.*` key must be a declared knob
+    * (`Knobs.requireDeclared`); Verify independently REFUSES to run with
+    * any oracle-pinned knob set, so this cannot poison the hash gate.
+    */
+  private[graft] def applyConf(s: SparkSession, raw: String): Unit =
+    raw.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty =>
+          Knobs.requireDeclared(k.trim)
+          s.conf.set(k.trim, v.trim)
+        case _ => sys.error(s"SPARK_GRAFT_CONF entry not k=v: '$kv'")
+      }
+    }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Diagnostic main for the `auto` skew knobs (ops.AutoKnob): prints, for
+/** Diagnostic main for the `auto` skew caps (Knobs.CapKnob): prints, for
   * one sf dir, each knob's fixed default, the derived `auto` value, and
   * the distribution stats it was derived from (p50/p99/max of node
   * degree, shingle df, IVF primary-cell occupancy) — the evidence that
@@ -16,7 +16,8 @@ object KnobProbe {
     require(args.length == 1, "usage: KnobProbe <sfDir>")
     val d = args(0)
     val spark = GraftSession.get()
-    import graft.ops.{AutoKnob, Dedup, Graph, Similarity}
+    import graft.ops.{Dedup, Graph, Similarity}
+    import Knobs.{annIvfCellCap, graphWedgeCap, shingleDfCutoff}
 
     def stats(df: org.apache.spark.sql.DataFrame, c: String): String = {
       val r = df.agg(
@@ -35,13 +36,13 @@ object KnobProbe {
       val deg = Materialize.stage(
         und.select(col("a").as("u")).union(und.select(col("b").as("u")))
           .groupBy(col("u")).agg(count(lit(1)).as("deg")))
-      val wedge = AutoKnob.fromP99(deg, "deg", 2, 8, 64)
-      println(s"KNOB wedgeCap default=64 auto=$wedge  [deg: ${stats(deg, "deg")}]")
+      val wedge = graphWedgeCap.fromP99(deg, "deg")
+      println(s"KNOB wedgeCap default=${graphWedgeCap.fallback} auto=$wedge  [deg: ${stats(deg, "deg")}]")
 
       // shingle document frequency (dfCutoff site)
       val dfs = Materialize.stage(Dedup.shingles(spark, d)
         .groupBy(col("shingle")).agg(count(lit(1)).as("df")))
-      val cut = AutoKnob.fromP99(dfs, "df", 8, 8, 8)
+      val cut = shingleDfCutoff.fromP99(dfs, "df")
       println(s"KNOB dfCutoff default=(uncapped) auto=$cut  [df: ${stats(dfs, "df")}]")
 
       // IVF primary-cell occupancy under sim_ann_ivf's md5-seeded K=16
@@ -50,7 +51,7 @@ object KnobProbe {
         .select(col("vec_id"), col("embedding"), col("nrm")))
       val seeds = e
         .orderBy(md5(col("vec_id").cast("string")).asc, col("vec_id").asc)
-        .limit(Similarity.defaultIvfCells)
+        .limit(Knobs.annIvfCells.default)
         .select(col("vec_id").as("sid"), col("embedding").as("semb"),
           col("nrm").as("snrm"))
       val occ = e.crossJoin(broadcast(seeds))
@@ -61,8 +62,8 @@ object KnobProbe {
             .orderBy(col("c").desc, col("sid").asc)))
         .filter(col("rn") === 1)
         .groupBy(col("sid")).agg(count(lit(1)).as("n"))
-      val cap = AutoKnob.fromP99(occ, "n", 2, 2, 2048)
-      println(s"KNOB ivfCellCap default=2048 auto=$cap  [occ: ${stats(occ, "n")}]")
+      val cap = annIvfCellCap.fromP99(occ, "n")
+      println(s"KNOB ivfCellCap default=${annIvfCellCap.fallback} auto=$cap  [occ: ${stats(occ, "n")}]")
     }
     spark.stop()
   }

@@ -15,23 +15,14 @@ import org.apache.spark.storage.StorageLevel
   * primitive for a real cluster: it truncates lineage into
   * executor-LOCAL blocks, so a single lost executor kills the job, and
   * it pins eager materialization that defeats AQE re-planning. The seam
-  * here defaults to `persist(MEMORY_AND_DISK)` — a plan-level barrier
+  * is `persist(MEMORY_AND_DISK)` — a plan-level barrier
   * (`InMemoryRelation`) that is recomputable from lineage on executor
-  * loss and spills instead of OOMing — with reliable `checkpoint()` as
-  * a conf opt-in for jobs whose lineage is too deep to recompute.
-  *
-  * Modes (`spark.graft.materialize`):
-  *  - `persist` (default): `persist(StorageLevel.MEMORY_AND_DISK)`;
-  *    staged frames are tracked per `scoped {}` bracket so runners
-  *    release each query's cache as it finishes (Spark's CacheManager
-  *    holds a reference, so un-released cache entries would otherwise
-  *    accumulate across an 85-query run), and releasing one query never
-  *    touches a concurrent query's staged frames.
-  *  - `checkpoint`: reliable `checkpoint()` to `spark.checkpoint.dir`
-  *    (HDFS/object store on a cluster) — survives executor loss with no
-  *    recompute; the right choice for very deep iterative lineage.
-  *  - `local`: round-2 behavior (`localCheckpoint()`), kept only as an
-  *    escape hatch for single-JVM experimentation.
+  * loss and spills instead of OOMing. Staged frames are tracked per
+  * `scoped {}` bracket so runners release each query's cache as it
+  * finishes (Spark's CacheManager holds a reference, so un-released
+  * cache entries would otherwise accumulate across an 85-query run),
+  * and releasing one query never touches a concurrent query's staged
+  * frames.
   */
 object Materialize {
 
@@ -44,8 +35,6 @@ object Materialize {
   final class Scope private[Materialize] () {
     private[Materialize] val staged =
       new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    private[Materialize] val ckptFiles =
-      new java.util.concurrent.ConcurrentLinkedQueue[(org.apache.spark.sql.SparkSession, String)]()
   }
 
   /** Fallback scope for callers outside any `scoped` bracket — the
@@ -55,9 +44,8 @@ object Materialize {
   private val current = ThreadLocal.withInitial[Scope](() => globalScope)
 
   /** Run `body` with a fresh staging scope bound to this thread, then
-    * release everything it staged (cache entries unpersisted, reliable
-    * checkpoint files deleted) — even on exception. Nesting restores the
-    * outer scope. This is the bracket Verify/Bench wrap each query in;
+    * release everything it staged (cache entries unpersisted) — even on
+    * exception. Nesting restores the outer scope. This is the bracket Verify/Bench wrap each query in;
     * concurrent runners get per-query isolation for free by each
     * wrapping their own thread's work.
     */
@@ -72,27 +60,12 @@ object Materialize {
     }
   }
 
-  private def checkpointTracked(df: DataFrame): DataFrame = {
-    val out = df.checkpoint()
-    // reliable checkpoint files are NOT cleaned by the ContextCleaner
-    // unless spark.cleaner.referenceTracking.cleanCheckpoints is set;
-    // track them so release honors the same "one query's
-    // materialization never outlives it" contract as persist mode
-    out.rdd.getCheckpointFile.foreach(f =>
-      current.get().ckptFiles.add((df.sparkSession, f)))
-    out
-  }
-
   /** Stage a multiply-consumed frame behind a materialization barrier. */
-  def stage(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("spark.graft.materialize", "persist") match {
-      case "checkpoint" => checkpointTracked(df)
-      case "local"      => df.localCheckpoint()
-      case _ =>
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-        current.get().staged.add(df)
-        df
-    }
+  def stage(df: DataFrame): DataFrame = {
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    current.get().staged.add(df)
+    df
+  }
 
   /** Stage + force the cache to build NOW (persist is lazy). For frames
     * whose first consumers are two CONCURRENT stages of a self-join:
@@ -100,16 +73,12 @@ object Materialize {
     * and serialize on block locks while holding task slots — observed
     * as multi-× run-to-run variance on the banded self-joins. One
     * upfront pass builds the cache; the join stages then only read.
-    * (checkpoint/localCheckpoint modes are already eager.)
     */
-  def stageEager(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("spark.graft.materialize", "persist") match {
-      case "checkpoint" | "local" => stage(df)
-      case _ =>
-        val out = stage(df)
-        out.count()
-        out
-    }
+  def stageEager(df: DataFrame): DataFrame = {
+    val out = stage(df)
+    out.count()
+    out
+  }
 
   /** Stage a frame produced by an ITERATIVE loop: like `stage`, but
     * first truncates the Catalyst plan (`createDataFrame(df.rdd,
@@ -121,15 +90,7 @@ object Materialize {
     * their parents — only the SQL plan is cut.
     */
   def stageIterative(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("spark.graft.materialize", "persist") match {
-      case "checkpoint" => checkpointTracked(df)
-      case "local"      => df.localCheckpoint()
-      case _ =>
-        val cut = df.sparkSession.createDataFrame(df.rdd, df.schema)
-        cut.persist(StorageLevel.MEMORY_AND_DISK)
-        current.get().staged.add(cut)
-        cut
-    }
+    stage(df.sparkSession.createDataFrame(df.rdd, df.schema))
 
   /** Release every frame staged in the CALLING THREAD's current scope
     * (the process-global fallback scope outside any `scoped` bracket —
@@ -145,13 +106,6 @@ object Materialize {
     while (df != null) {
       df.unpersist(blocking = false)
       df = s.staged.poll()
-    }
-    var ck = s.ckptFiles.poll()
-    while (ck != null) {
-      val (spark, file) = ck
-      val p = new org.apache.hadoop.fs.Path(file)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      ck = s.ckptFiles.poll()
     }
   }
 }

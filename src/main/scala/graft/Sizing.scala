@@ -31,7 +31,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * On a real cluster the same arithmetic holds: 265 GB of wedge pairs at
   * a 64 MB target yields ~4,200 partitions — a normal shuffle width for a
   * 1000-executor job — and the clamp cap (65,536) is far above it. The
-  * target is conf-tunable for executors with different memory budgets.
+  * target (`Knobs.sizingTargetPartitionBytes`, 64 MB) is conf-tunable for
+  * executors with different memory budgets.
   *
   * A sized exchange is only as good as the planner's willingness to keep
   * it. Three ways Spark silently undoes a pin, each measured at the 250×
@@ -49,15 +50,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Sizing {
 
-  /** Per-partition payload target. 64 MB of serialized shuffle rows
-    * expands 3–5× as JVM objects in a hash-aggregate / sort buffer, so
-    * this keeps each task's working set comfortably inside a standard
-    * 300–400 MB task memory share (1 GB executor core with default
-    * memory fractions) — conservative enough that estimate error of 2–3×
-    * still doesn't spill.
-    */
-  val DefaultTargetBytes: Long = 64L << 20
-
   /** Hard width cap: far above any measured need (100 TB of pair payload
     * at 64 MB = 1.6 M partitions would be mis-DESIGN, not mis-sizing —
     * the bucketed/banded operators bound payload long before that), and
@@ -66,8 +58,7 @@ object Sizing {
   val MaxPartitions: Int = 65536
 
   private def targetBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.sizing.targetPartitionBytes")
-      .map(_.toLong).filter(_ > 0).getOrElse(DefaultTargetBytes)
+    Knobs.sizingTargetPartitionBytes.get(spark)
 
   /** Saturating multiply for size estimates (non-negative inputs): an
     * estimate that overflows Long clamps to Long.MaxValue so the width

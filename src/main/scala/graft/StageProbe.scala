@@ -4,29 +4,34 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-/** Per-STAGE attribution for one registry query: runs the query under the
-  * bench's noop-sink action and prints every completed stage's wall, CPU,
-  * GC, shuffle bytes and record counts, sorted by CPU — the local-mode
-  * stand-in for the Spark UI's stage table (spark.ui is disabled in
-  * GraftSession). Measurement tooling only; not part of the driver
-  * contract.
+/** Per-STAGE attribution for registry queries: runs each query under the
+  * bench's noop-sink action and prints every completed stage's wall,
+  * task run time, CPU, GC, shuffle bytes, spill and record counts, sorted
+  * by CPU — the local-mode stand-in for the Spark UI's stage table
+  * (spark.ui is disabled in GraftSession), and the breakdown `Bench`'s
+  * per-query totals can't show. Measurement tooling only; not part of the
+  * driver contract.
   *
-  * Usage: runMain graft.StageProbe <sfDir> <queryName> [reps]
+  * Usage: runMain graft.StageProbe <sfDir> <query> [query ...] [reps]
+  * (a trailing integer is the rep count per query, default 1)
   */
 object StageProbe {
 
   private final case class StageRow(id: Int, name: String, tasks: Int,
-      wallMs: Long, cpuMs: Long, gcMs: Long,
+      wallMs: Long, runMs: Long, cpuMs: Long, gcMs: Long,
       inRec: Long, outRec: Long, srMb: Double, swMb: Double,
       spillMb: Double, deserCpuMs: Long, deserMs: Long)
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: StageProbe <sfDir> <queryName> [reps]")
+    require(args.length >= 2,
+      "usage: StageProbe <sfDir> <query> [query ...] [reps]")
     val sfDir = args(0)
-    val name = args(1)
-    val reps = if (args.length > 2) args(2).toInt else 1
-    val fn = SparkEntry.queries.getOrElse(name,
-      sys.error(s"unknown query: $name"))
+    val (names, reps) = args.drop(1).toSeq match {
+      case ns :+ r if ns.nonEmpty && r.toIntOption.isDefined => (ns, r.toInt)
+      case ns => (ns, 1)
+    }
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}")
     val spark = GraftSession.get()
     val rows = mutable.ArrayBuffer.empty[StageRow]
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -36,7 +41,7 @@ object StageProbe {
         if (m != null) rows.synchronized {
           rows += StageRow(si.stageId, si.name, si.numTasks,
             si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L),
-            m.executorCpuTime / 1000000, m.jvmGCTime,
+            m.executorRunTime, m.executorCpuTime / 1000000, m.jvmGCTime,
             m.inputMetrics.recordsRead, m.outputMetrics.recordsWritten,
             (m.shuffleReadMetrics.remoteBytesRead +
               m.shuffleReadMetrics.localBytesRead) / 1e6,
@@ -52,12 +57,13 @@ object StageProbe {
        Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count()
      else Tables.documents(spark, sfDir).groupBy("lang").count())
       .write.format("noop").mode("overwrite").save()
-    for (r <- 1 to reps) {
+    for (name <- names; r <- 1 to reps) {
       rows.synchronized(rows.clear())
       System.gc()
       val t0 = System.nanoTime()
       Materialize.scoped {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
       }
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(300) // let stage-completed events drain
@@ -68,7 +74,7 @@ object StageProbe {
         f"deserWallSum=${snap.map(_.deserMs).sum / 1e3}%.1fs ==")
       snap.sortBy(-_.cpuMs).take(40).foreach { s =>
         val nm = s.name.replaceAll("\\s+", " ").take(90)
-        println(f"stage=${s.id}%4d cpu=${s.cpuMs / 1e3}%7.2fs deserCpu=${s.deserCpuMs / 1e3}%7.2fs deserW=${s.deserMs / 1e3}%7.2fs wall=${s.wallMs / 1e3}%6.2fs gc=${s.gcMs / 1e3}%5.1fs tasks=${s.tasks}%4d " +
+        println(f"stage=${s.id}%4d run=${s.runMs / 1e3}%7.2fs cpu=${s.cpuMs / 1e3}%7.2fs deserCpu=${s.deserCpuMs / 1e3}%7.2fs deserW=${s.deserMs / 1e3}%7.2fs wall=${s.wallMs / 1e3}%6.2fs gc=${s.gcMs / 1e3}%5.1fs tasks=${s.tasks}%4d " +
           f"in=${s.inRec}%10d sr=${s.srMb}%8.1fMB sw=${s.swMb}%8.1fMB spill=${s.spillMb}%8.1fMB $nm")
       }
     }

@@ -13,19 +13,9 @@ object Verify {
     }
     val spark = GraftSession.get()
     new java.io.File(outDir).mkdirs()
-    // knobs that parameterize a Spark plan while the DuckDB oracle pins
-    // the default: verifying with one set would guarantee a false
-    // hash-mismatch, so refuse to produce the artifact at all
-    Seq("spark.graft.semantic.tau", "spark.graft.tfidf.minDf",
-        "spark.graft.shingle.dfCutoff",
-        "spark.graft.ann.bucketCap", "spark.graft.ann.ivfCells",
-        "spark.graft.ann.nprobe", "spark.graft.ann.ivfCellCap",
-        "spark.graft.ann.ivfKmeansIters",
-        "spark.graft.eval.sampleMod",
-        "spark.graft.graph.wedgeCap").foreach { k =>
-      require(spark.conf.getOption(k).forall(_.trim.isEmpty),
-        s"$k is set, but its oracle pins the default — unset it for verification")
-    }
+    // an oracle-pinned knob set would guarantee a false hash mismatch,
+    // so refuse to produce the artifact at all
+    Knobs.requireOracleDefaults(spark)
     // a typo'd name must fail loudly — filtering to an empty set would
     // exit green having verified nothing
     val unknown = only.diff(SparkEntry.queries.keySet)

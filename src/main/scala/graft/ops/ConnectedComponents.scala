@@ -23,9 +23,8 @@ import org.apache.spark.sql.functions._
   *
   * Edges shuffle on the node id each round — no driver-side graph state;
   * the only driver value per round is the convergence count. Per-round
-  * frames go through the Materialize seam (persist by default, reliable
-  * checkpoint opt-in for cluster runs where O(log n) rounds of lineage
-  * would otherwise stack).
+  * frames go through the Materialize seam's plan-truncating stage, so
+  * O(log n) rounds of plan do not stack.
   */
 object ConnectedComponents {
 

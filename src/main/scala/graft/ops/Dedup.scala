@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{GraftQuery, Materialize, QueryModule, Sizing, Tables}
+import graft.{GraftQuery, Knobs, Materialize, QueryModule, Sizing, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *    so the shuffle carries 32-byte keys instead of full texts.
   *  - The shingle inverted index is the one surface with a skew hazard
   *    (hot shingles → giant posting lists). AQE skew-join splitting is
-  *    on (GraftSession), and `spark.graft.shingle.dfCutoff` drops
+  *    on (GraftSession), and `Knobs.shingleDfCutoff` drops
   *    above-cutoff shingles from candidate generation only (the
   *    exact-verify join still scores full shingle sets) — MinHash
   *    banding (dedup_minhash) remains the preferred path at scale
@@ -461,7 +461,7 @@ object Dedup extends QueryModule {
     // on exact driver-side stats; see the helper's scaladoc for the
     // lemma, the measured masses, and the dispatch rule. The
     // subquadratic probabilistic scale path remains dedup_minhash
-    // below, and `spark.graft.shingle.dfCutoff` can bound hot shingles
+    // below, and `Knobs.shingleDfCutoff` can bound hot shingles
     // outright (candidate generation only — the verify join always
     // scores full shingle sets, so reported jaccards stay exact).
     GraftQuery(
@@ -470,9 +470,9 @@ object Dedup extends QueryModule {
         val sh = shingles(s, d)
         val a  = sh.select(col("doc_id").as("doc_a"), col("shingle"))
         val b  = sh.select(col("doc_id").as("doc_b"), col("shingle").as("sh2"))
-        val cutoff = s.conf.get("spark.graft.shingle.dfCutoff", "").trim
+        val cutoff = Knobs.shingleDfCutoff.get(s)
         val pairs =
-          if (cutoff.isEmpty) {
+          if (cutoff == Knobs.Cap.Unset) {
             // exact path: prefix-filtered AllPairs (prefixJaccardPairs).
             // The naive spelling — the posting self-join streaming
             // Σ_shingle C(df, 2) pairs into one sized aggregate — was
@@ -493,7 +493,7 @@ object Dedup extends QueryModule {
             // Recall loss is confined to pairs overlapping ONLY in
             // ultra-hot shingles, which at J >= 0.8 means boilerplate.
             // `auto` derives the cutoff from the df distribution's own
-            // tail (AutoKnob scaladoc): 8 × p99(df), floor 8 — p99 sits
+            // tail (Knobs.CapKnob): 8 × p99(df), floor 8 — p99 sits
             // at the corpus's NORMAL shared-shingle frequency (ScaleGen
             // replication shifts it with the replica count; a fixed
             // cutoff tuned at one sf is wrong at 100×), and 8× of it is
@@ -502,17 +502,7 @@ object Dedup extends QueryModule {
             // the keep-filter read one computation.
             val dfs = Materialize.stage(
               sh.groupBy(col("shingle")).agg(count(lit(1)).as("df")))
-            val k =
-              if (cutoff == "auto")
-                AutoKnob.fromP99(dfs, "df", mult = 8, floor = 8, fallback = 8)
-              else {
-                val c = cutoff.toIntOption.getOrElse(sys.error(
-                  s"spark.graft.shingle.dfCutoff must be a positive integer " +
-                    s"or 'auto', got '$cutoff'"))
-                require(c >= 1,
-                  s"spark.graft.shingle.dfCutoff must be >= 1 (a df-1 shingle is unique to one doc), got $c")
-                c
-              }
+            val k = Knobs.shingleDfCutoff.resolve(cutoff, dfs, "df")
             val keep = dfs
               .filter(col("df") <= k)
               .select(col("shingle").as("keep_sh"))
@@ -661,14 +651,14 @@ object Dedup extends QueryModule {
     GraftQuery(
       "dedup_minhash_eval",
       (s, d) => {
-        // spark.graft.eval.sampleMod slices BOTH pair sides: truth
+        // Knobs.evalSampleMod slices BOTH pair sides: truth
         // membership and band-candidate membership are per-pair
         // properties (signatures are per-doc), so the sliced counts are
         // EXACTLY the full-run counts restricted to in-slice pairs and
         // the (n/m)² truth arm replaces the n² one. The oracle pins the
-        // exhaustive default; Verify refuses the knob (EvalSampling
+        // exhaustive default (oracle-pinned: Knobs; EvalSampling
         // scaladoc).
-        val m = EvalSampling.sampleMod(s)
+        val m = Knobs.evalSampleMod.get(s)
         val sh = {
           val sh0 = shingles(s, d)
           if (m <= 1L) sh0
@@ -1117,18 +1107,9 @@ object Dedup extends QueryModule {
       (s, d) => {
         // τ = 0.35 exercises non-trivial clusters on the synthetic
         // corpus (max within-cell cosine ≈ 0.47); production text
-        // embeddings would run 0.95+ — `spark.graft.semantic.tau`
-        // overrides (the oracle pins the default)
-        val raw = s.conf.get("spark.graft.semantic.tau", "").trim
-        val tau =
-          if (raw.isEmpty) 0.35
-          else {
-            val t = raw.toDoubleOption.getOrElse(sys.error(
-              s"spark.graft.semantic.tau must be a number in [-1, 1], got '$raw'"))
-            require(t >= -1.0 && t <= 1.0,
-              s"spark.graft.semantic.tau must be a cosine in [-1, 1], got $t")
-            t
-          }
+        // embeddings would run 0.95+ — `Knobs.semanticTau` overrides
+        // (oracle-pinned)
+        val tau = Knobs.semanticTau.get(s)
         val e = Tables.embeddings(s, d).select(
           col("vec_id"), col("label"), col("embedding"),
           expr("sqrt(vec_dot(embedding, embedding))").as("nrm"))

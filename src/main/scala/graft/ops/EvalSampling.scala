@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Deterministic md5-slice sampling for the two quadratic TRUTH arms
@@ -18,11 +18,10 @@ import org.apache.spark.sql.functions._
   * hex digits — 60 bits, sign-safe in a BIGINT) gives both; md5 is the
   * engine's shared deterministic hash.
   *
-  * `spark.graft.eval.sampleMod` = m keeps 1/m of ids; unset or 1 = the
+  * `Knobs.evalSampleMod` = m keeps 1/m of ids; unset or 1 = the
   * exhaustive default. The DuckDB oracles pin the DEFAULT, so Verify
-  * REFUSES to run with the knob set (the established pattern for every
-  * plan-parameterizing conf): the hash gate can never be run against a
-  * sliced result.
+  * REFUSES to run with the knob set (oracle-pinned, see Knobs): the hash
+  * gate can never be run against a sliced result.
   *
   * Sampling semantics per eval:
   *  - recall gate: the QUERY side is sliced, the corpus/quantizer side
@@ -35,19 +34,6 @@ import org.apache.spark.sql.functions._
   *    restricted to pairs with both docs in slice (cost (n/m)²).
   */
 object EvalSampling {
-  val ConfKey = "spark.graft.eval.sampleMod"
-
-  def sampleMod(s: SparkSession): Long = {
-    val raw = s.conf.get(ConfKey, "").trim
-    if (raw.isEmpty) 1L
-    else {
-      val m = raw.toLongOption.getOrElse(sys.error(
-        s"$ConfKey must be a positive integer, got '$raw'"))
-      require(m >= 1L, s"$ConfKey must be >= 1, got $m")
-      m
-    }
-  }
-
   /** Membership predicate: true iff `id` is in the deterministic 1/m
     * slice. `m <= 1` compiles to a constant-true (no hash in the plan).
     */

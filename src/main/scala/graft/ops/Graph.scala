@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{GraftQuery, Materialize, QueryModule, Sizing, Tables}
+import graft.{GraftQuery, Knobs, Materialize, QueryModule, Sizing, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -871,25 +871,15 @@ object Graph extends QueryModule {
             .union(und.select(col("b").as("u"), col("a").as("v"))))
         val deg = Materialize.stage(
           sym.groupBy(col("u")).agg(count(lit(1)).as("deg")))
-        // `spark.graft.graph.wedgeCap` overrides the mid-degree cap (the
-        // oracle pins the default 64; Verify refuses the knob). `auto`
-        // derives it from the degree distribution's own tail (AutoKnob
-        // scaladoc): 2 × p99(deg), floor 8 — mids inside twice the
-        // 99th-percentile degree are normal graph mass, beyond it the
-        // celebrity tail whose deg² wedge term the cap exists to bound.
+        // `Knobs.graphWedgeCap` overrides the mid-degree cap (the oracle
+        // pins the default 64). `auto` derives it from the degree
+        // distribution's own tail (Knobs.CapKnob): 2 × p99(deg), floor
+        // 8 — mids inside twice the 99th-percentile degree are normal
+        // graph mass, beyond it the celebrity tail whose deg² wedge term
+        // the cap exists to bound.
         // The pre-aggregate rides the already-staged degree frame.
-        val capRaw = s.conf.get("spark.graft.graph.wedgeCap", "").trim
-        val wedgeCap =
-          if (capRaw.isEmpty) 64
-          else if (capRaw == "auto")
-            AutoKnob.fromP99(deg, "deg", mult = 2, floor = 8, fallback = 64)
-          else {
-            val c = capRaw.toIntOption.getOrElse(sys.error(
-              s"spark.graft.graph.wedgeCap must be a positive int or " +
-                s"'auto', got '$capRaw'"))
-            require(c >= 1, s"spark.graft.graph.wedgeCap must be >= 1, got $c")
-            c
-          }
+        val wedgeCap = Knobs.graphWedgeCap.resolve(
+          Knobs.graphWedgeCap.get(s), deg, "deg")
         val capped = deg.filter(col("deg") <= lit(wedgeCap))
         // Sizing seam (SCALE.md §4b): the self-join emits exactly
         // Σ_w C(deg(w), 2) wedge pairs, and at the 100× rung the default

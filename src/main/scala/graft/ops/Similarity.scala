@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{GraftQuery, Materialize, QueryModule, Tables}
+import graft.{GraftQuery, Knobs, Materialize, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,7 +75,7 @@ object Similarity extends QueryModule {
   private[graft] def sigTest(s: SparkSession, d: String): DataFrame =
     normed(s, d).withColumn("sig", expr(lshSigExpr))
 
-  /** Default per-(band, bucket) probe cap — the Σ bucket² bound knob.
+  /** Default per-(band, bucket) probe cap — the Σ bucket² bound.
     * 4 bands × 64 probes = up to 256 exact-cosine re-ranks per vector,
     * ample for a top-1 ANN; interpolated into the oracle so both
     * engines cap by the identical rank rule.
@@ -339,10 +339,10 @@ object Similarity extends QueryModule {
     // candidates; candidates are re-ranked by exact cosine and each query
     // keeps its top-1.
     //
-    // Candidate work is conf-BOUNDED: with only 16 possible buckets per
+    // Candidate work is BOUNDED: with only 16 possible buckets per
     // band, uncapped candidates grow as Σ bucket² ≈ n²/16 per band (the
     // measured 7.2× wall at 10× data). The probe side of the band join is
-    // therefore capped to the `bucketCap` lowest vec_ids per (band,
+    // therefore capped to the `defaultBucketCap` lowest vec_ids per (band,
     // bucket) — row_number ≤ k, which Spark plans as WindowGroupLimit
     // per-partition heaps, no full bucket sort — so each vector scores at
     // most bands × bucketCap candidates and total candidate volume is
@@ -350,20 +350,10 @@ object Similarity extends QueryModule {
     // uncapped, so every vector still probes its buckets and keeps a
     // top-1 whenever any capped member shares a band. The cap is
     // oracle-twinned (same rank rule both engines), so the hash gate
-    // holds even where it binds; `spark.graft.ann.bucketCap` overrides
-    // (Verify pins the default).
+    // holds even where it binds.
     GraftQuery(
       "sim_ann_lsh",
       (s, d) => {
-        val capRaw = s.conf.get("spark.graft.ann.bucketCap", "").trim
-        val cap =
-          if (capRaw.isEmpty) defaultBucketCap
-          else {
-            val c = capRaw.toIntOption.getOrElse(sys.error(
-              s"spark.graft.ann.bucketCap must be a positive int, got '$capRaw'"))
-            require(c >= 2, s"spark.graft.ann.bucketCap must be >= 2, got $c")
-            c
-          }
         // Signatures are 1024 md5 evaluations per row and feed the band
         // explode plus both re-rank join sides: distribute the signature
         // work across all cores (the raw scan may be 1–2 file splits),
@@ -385,7 +375,7 @@ object Similarity extends QueryModule {
           .withColumn("rn", row_number().over(
             Window.partitionBy(col("b2"), col("band_sig2"))
               .orderBy(col("vb").asc)))
-          .filter(col("rn") <= cap).drop("rn")
+          .filter(col("rn") <= defaultBucketCap).drop("rn")
         val cand = ba.join(bb,
             col("b") === col("b2") && col("band_sig") === col("band_sig2") &&
               col("va") =!= col("vb"))
@@ -478,34 +468,17 @@ object Similarity extends QueryModule {
     GraftQuery(
       "sim_ann_ivf",
       (s, d) => {
-        val kRaw = s.conf.get("spark.graft.ann.ivfCells", "").trim
-        val k =
-          if (kRaw.isEmpty) defaultIvfCells
-          else {
-            val c = kRaw.toIntOption.getOrElse(sys.error(
-              s"spark.graft.ann.ivfCells must be a positive int, got '$kRaw'"))
-            require(c >= 1, s"spark.graft.ann.ivfCells must be >= 1, got $c")
-            c
-          }
+        val k = Knobs.annIvfCells.get(s)
         val e = Materialize.stageEager(
           normed(s, d).repartition(s.sparkContext.defaultParallelism,
             col("vec_id")))
         // coarse quantizer: K md5-ordered seed vectors by default (the
-        // oracle-pinned path); `spark.graft.ann.ivfKmeansIters` > 0
+        // oracle-pinned path); `Knobs.annIvfKmeansIters` > 0
         // swaps in a Lloyd's-k-means codebook learned from those same
         // seeds — every plan shape downstream is unchanged, exactly the
         // "swap the seeds frame" seam the scaladoc promises. Recall
         // strictly improves at equal nprobe (SimilaritySpec measures).
-        val kmRaw = s.conf.get("spark.graft.ann.ivfKmeansIters", "").trim
-        val kmIters =
-          if (kmRaw.isEmpty) 0
-          else {
-            val i = kmRaw.toIntOption.getOrElse(sys.error(
-              s"spark.graft.ann.ivfKmeansIters must be a non-negative int, got '$kmRaw'"))
-            require(i >= 0,
-              s"spark.graft.ann.ivfKmeansIters must be >= 0, got $i")
-            i
-          }
+        val kmIters = Knobs.annIvfKmeansIters.get(s)
         val seeds =
           if (kmIters > 0) kmeansCentroids(e, k, kmIters)
           else e
@@ -518,15 +491,7 @@ object Similarity extends QueryModule {
         // index is probed, never duplicated). Default 1 = single-probe,
         // the oracle-pinned plan; raising it trades nprobe× search work
         // for recall on boundary vectors — the standard IVF knob.
-        val npRaw = s.conf.get("spark.graft.ann.nprobe", "").trim
-        val nprobe =
-          if (npRaw.isEmpty) 1
-          else {
-            val p = npRaw.toIntOption.getOrElse(sys.error(
-              s"spark.graft.ann.nprobe must be a positive int, got '$npRaw'"))
-            require(p >= 1, s"spark.graft.ann.nprobe must be >= 1, got $p")
-            p
-          }
+        val nprobe = Knobs.annNprobe.get(s)
         // nearest-seed assignment: broadcast K seeds, top-nprobe cosine
         val aw = Window.partitionBy(col("vec_id"))
           .orderBy(col("c").desc, col("sid").asc)
@@ -537,27 +502,17 @@ object Similarity extends QueryModule {
           .withColumn("rn", row_number().over(aw))
           .filter(col("rn") <= nprobe)
           .select(col("vec_id"), col("sid").as("cell"), col("rn"))
-        val capRaw = s.conf.get("spark.graft.ann.ivfCellCap", "").trim
         // `auto` derives the cap from the measured occupancy tail
-        // (AutoKnob scaladoc): 2 × p99 of primary-cell sizes — inside
-        // that is normal cell mass, beyond it the skew the cap bounds.
-        // The assignment is staged so the occupancy pre-aggregate and
-        // both probe sides read one computation.
-        val (cellCap, assignC) =
-          if (capRaw == "auto") {
-            val st = Materialize.stage(assign)
-            val occ = st.filter(col("rn") === 1)
-              .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-            (AutoKnob.fromP99(occ, "n", mult = 2, floor = 2,
-              fallback = defaultIvfCellCap), st)
-          } else if (capRaw.isEmpty) (defaultIvfCellCap, assign)
-          else {
-            val c = capRaw.toIntOption.getOrElse(sys.error(
-              s"spark.graft.ann.ivfCellCap must be a positive int or " +
-                s"'auto', got '$capRaw'"))
-            require(c >= 2, s"spark.graft.ann.ivfCellCap must be >= 2, got $c")
-            (c, assign)
-          }
+        // (Knobs.CapKnob): 2 × p99 of primary-cell sizes — inside that
+        // is normal cell mass, beyond it the skew the cap bounds. The
+        // assignment is staged so the occupancy pre-aggregate and both
+        // probe sides read one computation.
+        val capSet = Knobs.annIvfCellCap.get(s)
+        val assignC =
+          if (capSet == Knobs.Cap.Auto) Materialize.stage(assign) else assign
+        val cellCap = Knobs.annIvfCellCap.resolve(capSet,
+          assignC.filter(col("rn") === 1)
+            .groupBy(col("cell")).agg(count(lit(1)).as("n")), "n")
         // exact search: query probes its cells; corpus sits in its primary
         val a = e.join(assignC.drop("rn"), "vec_id")
           .select(col("vec_id").as("va"), col("cell"),
@@ -582,7 +537,7 @@ object Similarity extends QueryModule {
         seeds AS (
           SELECT vec_id AS sid, embedding AS semb, nrm AS snrm
           FROM e ORDER BY md5(vec_id::VARCHAR) ASC, vec_id ASC
-          LIMIT $defaultIvfCells),
+          LIMIT ${Knobs.annIvfCells.default}),
         assign AS (
           SELECT vec_id, sid AS cell FROM (
             SELECT e.vec_id, s.sid,
@@ -602,7 +557,7 @@ object Similarity extends QueryModule {
                    ROW_NUMBER() OVER (PARTITION BY cell
                                       ORDER BY vec_id ASC) AS crn
             FROM cells) t
-          WHERE crn <= $defaultIvfCellCap),
+          WHERE crn <= ${Knobs.annIvfCellCap.fallback}),
         scored AS (
           SELECT a.vec_id AS va, b.vec_id AS vb,
                  list_reduce(list_transform(generate_series(1, 64),
@@ -639,16 +594,16 @@ object Similarity extends QueryModule {
     GraftQuery(
       "sim_ann_recall_gate",
       (s, d) => {
-        val k = defaultIvfCells
+        val k = Knobs.annIvfCells.default
         val e = Materialize.stageEager(
           normed(s, d).select(col("vec_id"), col("embedding"), col("nrm"))
             .repartition(s.sparkContext.defaultParallelism, col("vec_id")))
-        // spark.graft.eval.sampleMod slices the QUERY side only (the
+        // Knobs.evalSampleMod slices the QUERY side only (the
         // corpus, seeds, and learned centroids stay full), turning the
         // n² yardstick into n·n/m — recall per sliced query is exactly
-        // its full-run value. The oracle pins the exhaustive default;
-        // Verify refuses the knob (EvalSampling scaladoc).
-        val m = EvalSampling.sampleMod(s)
+        // its full-run value. The oracle pins the exhaustive default
+        // (oracle-pinned: Knobs; EvalSampling scaladoc).
+        val m = Knobs.evalSampleMod.get(s)
         val eq =
           if (m <= 1L) e else e.filter(EvalSampling.inSlice(col("vec_id"), m))
         // per-nprobe IVF top-1 under a given quantizer: one assignment
@@ -699,7 +654,7 @@ object Similarity extends QueryModule {
             .filter(col("rn") <= depth)
           val perQuery =
             if (capped) math.min(eCount,
-              probes.max.toLong * defaultIvfCellCap)
+              probes.max.toLong * Knobs.annIvfCellCap.fallback)
             else eCount
           // saturating product: the uncapped arm is |queries|×|corpus|,
           // which overflows Long on very large corpora — a wrapped
@@ -725,7 +680,7 @@ object Similarity extends QueryModule {
              else cb0
                .withColumn("crn", row_number().over(
                  Window.partitionBy(col("cell2")).orderBy(col("vb").asc)))
-               .filter(col("crn") <= defaultIvfCellCap).drop("crn"))
+               .filter(col("crn") <= Knobs.annIvfCellCap.fallback).drop("crn"))
               .withColumn("salt2", pmod(hash(col("vb")), lit(SALT)))
               .repartition(nJ, col("cell2"), col("salt2"))
           qa.join(cb, col("cell") === col("cell2") &&
@@ -779,7 +734,7 @@ object Similarity extends QueryModule {
         seeds AS (
           SELECT vec_id AS sid, embedding AS semb, nrm AS snrm
           FROM e ORDER BY md5(vec_id::VARCHAR) ASC, vec_id ASC
-          LIMIT $defaultIvfCells),
+          LIMIT ${Knobs.annIvfCells.default}),
         exact AS (
           SELECT va, vb AS exact_nn FROM (
             SELECT a.vec_id AS va, b.vec_id AS vb,
@@ -811,7 +766,7 @@ object Similarity extends QueryModule {
                    ROW_NUMBER() OVER (PARTITION BY a.sid
                                       ORDER BY e.vec_id ASC) AS crn
             FROM e JOIN assign a ON e.vec_id = a.vec_id AND a.rn = 1) t
-          WHERE crn <= $defaultIvfCellCap),
+          WHERE crn <= ${Knobs.annIvfCellCap.fallback}),
         np AS (SELECT UNNEST([1, 2, 4]) AS nprobe),
         top1 AS (
           SELECT nprobe, va, vb AS ann_id FROM (
@@ -1314,18 +1269,4 @@ object Similarity extends QueryModule {
         ORDER BY vec_id
       """))
   )
-
-  /** Default IVF cell count. At corpus scale pick K ∝ n/targetCellSize
-    * (e.g. 4k-row cells); 16 cells over the sf0.001 fixture's 500
-    * vectors ≈ 31-row cells — the same ratio.
-    */
-  private[graft] val defaultIvfCells = 16
-
-  /** Default per-cell corpus cap for `sim_ann_ivf` — the Σ cell² bound
-    * knob for skewed embedding distributions. Sized several× the
-    * balanced cell at test SFs (≈ n/K rows), so it binds only when a
-    * dominant cluster collapses into one cell; at corpus scale set it
-    * to a small multiple of the target cell size.
-    */
-  private[graft] val defaultIvfCellCap = 2048
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{GraftQuery, Materialize, QueryModule, Tables}
+import graft.{GraftQuery, Knobs, Materialize, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -289,7 +289,7 @@ object TextAnalysis extends QueryModule {
     // dominated by hapax tokens (typos, IDs, hashes). So the df join is
     // a plain shuffled equi-join on the token (NO broadcast hint; AQE
     // still auto-broadcasts at runtime when df measures small), and
-    // `spark.graft.tfidf.minDf` bounds the vocabulary by construction:
+    // `Knobs.tfidfMinDf` bounds the vocabulary by construction:
     // tokens with df < minDf are dropped from the ranking. minDf=2
     // alone removes the hapax tail that dominates a web-scale vocab.
     GraftQuery(
@@ -301,16 +301,9 @@ object TextAnalysis extends QueryModule {
           .groupBy(col("doc_id"), col("tok"))
           .agg(count(lit(1)).as("tf"))
         val dfreqAll = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-        val minDf = s.conf.get("spark.graft.tfidf.minDf", "").trim
+        val minDf = Knobs.tfidfMinDf.get(s)
         val dfreq =
-          if (minDf.isEmpty) dfreqAll
-          else {
-            val k = minDf.toIntOption.getOrElse(sys.error(
-              s"spark.graft.tfidf.minDf must be a positive integer, got '$minDf'"))
-            require(k >= 1,
-              s"spark.graft.tfidf.minDf must be >= 1, got $k")
-            dfreqAll.filter(col("df") >= k)
-          }
+          if (minDf <= 1) dfreqAll else dfreqAll.filter(col("df") >= minDf)
         // corpus size stays executor-side: 1-row agg broadcast, no collect()
         val nDf = Tables.documents(s, d).agg(count(lit(1)).as("n"))
         val w = Window.partitionBy(col("doc_id"))

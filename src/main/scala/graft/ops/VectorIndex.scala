@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{GraftQuery, Materialize, QueryModule, Tables}
+import graft.{GraftQuery, Knobs, Materialize, QueryModule, Tables}
 import graft.pipeline.{SnapshotStore, Sources}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * Scale shape (100 TB of embeddings): ingest is O(delta + touched
   * cells) — new vectors append to their cell's bucket, nothing else
   * moves; the in-cell exact search is bounded by the per-cell cap
-  * (`Similarity.defaultIvfCellCap` — same Σ cell² skew bound as the
+  * (`Knobs.annIvfCellCap.fallback` — same Σ cell² skew bound as the
   * ephemeral operator, identically oracle-twinned); K scales as
   * n/targetCellSize with the same recall/nprobe tradeoff measured in
   * SCALE.md. Lloyd's-k-means centroids (`Similarity.kmeansCentroids`)
@@ -274,7 +274,7 @@ object VectorIndex extends QueryModule {
     * until the rebuild lands.
     */
   def needsReindex(s: SparkSession, dir: String,
-                   cellCap: Int = Similarity.defaultIvfCellCap,
+                   cellCap: Int = Knobs.annIvfCellCap.fallback,
                    triggerFactor: Double = 0.8): Boolean =
     meanOccupancy(s, dir) > triggerFactor * cellCap
 
@@ -310,7 +310,7 @@ object VectorIndex extends QueryModule {
     * until Some(k) returns, then swap probes to `outDir`.
     */
   def maybeReindex(s: SparkSession, dir: String, outDir: String,
-                   cellCap: Int = Similarity.defaultIvfCellCap,
+                   cellCap: Int = Knobs.annIvfCellCap.fallback,
                    triggerFactor: Double = 0.8,
                    targetFactor: Double = 0.4): Option[Int] = {
     require(targetFactor > 0 && targetFactor < triggerFactor,
@@ -328,7 +328,7 @@ object VectorIndex extends QueryModule {
     */
   def query(s: SparkSession, queries: DataFrame, dir: String,
             nprobe: Int = 1,
-            cellCap: Int = Similarity.defaultIvfCellCap): DataFrame = {
+            cellCap: Int = Knobs.annIvfCellCap.fallback): DataFrame = {
     val cents = readCentroids(s, dir)
     // staged (r12, VERDICT r11 item 6): qa is consumed by the probed-
     // cell collect AND the scoring join — unstaged, the corpus × K
@@ -371,7 +371,7 @@ object VectorIndex extends QueryModule {
     */
   def rangeQuery(s: SparkSession, queries: DataFrame, dir: String,
                  tau: Double, nprobe: Int = 1,
-                 cellCap: Int = Similarity.defaultIvfCellCap): DataFrame = {
+                 cellCap: Int = Knobs.annIvfCellCap.fallback): DataFrame = {
     val cents = readCentroids(s, dir)
     // staged: same two-consumer shape as query() above
     val qa = Materialize.stage(assign(queries, cents, nprobe).drop("rn")
@@ -409,7 +409,7 @@ object VectorIndex extends QueryModule {
     */
   def queryAdc(s: SparkSession, queries: DataFrame, dir: String,
                nprobe: Int = 1, rerank: Int = 8,
-               cellCap: Int = Similarity.defaultIvfCellCap): DataFrame = {
+               cellCap: Int = Knobs.annIvfCellCap.fallback): DataFrame = {
     val cents = readCentroids(s, dir)
     val books = s.read.parquet(codebooksDir(dir))
     // staged (r12, VERDICT r11 item 6): qa is consumed FOUR times here
@@ -504,15 +504,9 @@ object VectorIndex extends QueryModule {
         val e = normed(s, d)
         val base  = e.filter(pmod(col("vec_id"), lit(4)) =!= 3)
         val delta = e.filter(pmod(col("vec_id"), lit(4)) === 3)
-        // K honors the same conf knob as sim_ann_ivf so scale runs can
-        // exercise the K ∝ n reindex contract; the oracle pins the
-        // default and Verify refuses to run with the knob set
-        val k = s.conf.get("spark.graft.ann.ivfCells", "").trim match {
-          case "" => Similarity.defaultIvfCells
-          case raw => raw.toIntOption.filter(_ >= 1).getOrElse(sys.error(
-            s"spark.graft.ann.ivfCells must be a positive int, got '$raw'"))
-        }
-        build(s, base, dir, k)
+        // K honors the same knob as sim_ann_ivf so scale runs can
+        // exercise the K ∝ n reindex contract (oracle-pinned: Knobs)
+        build(s, base, dir, Knobs.annIvfCells.get(s))
         ingest(s, delta, dir)
         query(s, e, dir)
       },
@@ -526,7 +520,7 @@ object VectorIndex extends QueryModule {
           SELECT vec_id AS sid, embedding AS semb, nrm AS snrm
           FROM e WHERE vec_id % 4 <> 3
           ORDER BY md5(vec_id::VARCHAR) ASC, vec_id ASC
-          LIMIT ${Similarity.defaultIvfCells}),
+          LIMIT ${Knobs.annIvfCells.default}),
         assign AS (
           SELECT vec_id, sid AS cell FROM (
             SELECT e.vec_id, s.sid,
@@ -546,7 +540,7 @@ object VectorIndex extends QueryModule {
                    ROW_NUMBER() OVER (PARTITION BY cell
                                       ORDER BY vec_id ASC) AS crn
             FROM cells) t
-          WHERE crn <= ${Similarity.defaultIvfCellCap}),
+          WHERE crn <= ${Knobs.annIvfCellCap.fallback}),
         scored AS (
           SELECT a.vec_id AS va, b.vec_id AS vb,
                  list_reduce(list_transform(generate_series(1, 64),
@@ -580,12 +574,7 @@ object VectorIndex extends QueryModule {
         new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
           .delete(new Path(dir), true)
         val e = normed(s, d)
-        val k = s.conf.get("spark.graft.ann.ivfCells", "").trim match {
-          case "" => Similarity.defaultIvfCells
-          case raw => raw.toIntOption.filter(_ >= 1).getOrElse(sys.error(
-            s"spark.graft.ann.ivfCells must be a positive int, got '$raw'"))
-        }
-        build(s, e, dir, k)
+        build(s, e, dir, Knobs.annIvfCells.get(s))
         rangeQuery(s, e.filter(col("vec_id") < 3), dir, tau = 0.2)
       },
       Some(s"""
@@ -598,7 +587,7 @@ object VectorIndex extends QueryModule {
           SELECT vec_id AS sid, embedding AS semb, nrm AS snrm
           FROM e
           ORDER BY md5(vec_id::VARCHAR) ASC, vec_id ASC
-          LIMIT ${Similarity.defaultIvfCells}),
+          LIMIT ${Knobs.annIvfCells.default}),
         assign AS (
           SELECT vec_id, sid AS cell FROM (
             SELECT e.vec_id, s.sid,
@@ -618,7 +607,7 @@ object VectorIndex extends QueryModule {
                    ROW_NUMBER() OVER (PARTITION BY cell
                                       ORDER BY vec_id ASC) AS crn
             FROM cells) t
-          WHERE crn <= ${Similarity.defaultIvfCellCap})
+          WHERE crn <= ${Knobs.annIvfCellCap.fallback})
         SELECT va AS vec_id, vb AS match_id, cosine FROM (
           SELECT a.vec_id AS va, b.vec_id AS vb,
                  list_reduce(list_transform(generate_series(1, 64),
@@ -648,7 +637,7 @@ object VectorIndex extends QueryModule {
         val e = normed(s, d)
         val base  = e.filter(pmod(col("vec_id"), lit(4)) =!= 3)
         val delta = e.filter(pmod(col("vec_id"), lit(4)) === 3)
-        build(s, base, dir, Similarity.defaultIvfCells)
+        build(s, base, dir, Knobs.annIvfCells.default)
         ingest(s, delta, dir)
         queryAdc(s, e, dir)
       },
@@ -662,7 +651,7 @@ object VectorIndex extends QueryModule {
           SELECT vec_id AS sid, embedding AS semb, nrm AS snrm
           FROM e WHERE vec_id % 4 <> 3
           ORDER BY md5(vec_id::VARCHAR) ASC, vec_id ASC
-          LIMIT ${Similarity.defaultIvfCells}),
+          LIMIT ${Knobs.annIvfCells.default}),
         assign AS (
           SELECT vec_id, sid AS cell FROM (
             SELECT e.vec_id, s.sid,
@@ -682,7 +671,7 @@ object VectorIndex extends QueryModule {
                    ROW_NUMBER() OVER (PARTITION BY cell
                                       ORDER BY vec_id ASC) AS crn
             FROM cells) t
-          WHERE crn <= ${Similarity.defaultIvfCellCap}),
+          WHERE crn <= ${Knobs.annIvfCellCap.fallback}),
         books AS (
           SELECT c, semb FROM (
             SELECT semb,

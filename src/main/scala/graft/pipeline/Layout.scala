@@ -477,10 +477,7 @@ object Layout extends QueryModule {
             col("user_id"), col("event_type"), col("value"))
           .repartition(64)
           .write.mode("overwrite").parquet(landing)
-        val target = s.conf.get("spark.graft.compact.targetFileBytes",
-          (128L * 1024 * 1024).toString).toLong
-        require(target > 0, s"targetFileBytes must be positive, got $target")
-        compact(s, landing, compacted, target)
+        compact(s, landing, compacted, 128L << 20) // 128 MB files
         s.read.parquet(compacted).orderBy(col("event_id"))
       },
       Some("""

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Knobs
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod, when}
@@ -23,7 +24,7 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod, when}
   * }}}
   *
   * Rows are hash-partitioned on the key into a fixed number of buckets
-  * (`spark.graft.snapshot.buckets`, pinned at first commit). A version
+  * (`Knobs.snapshotBuckets`, pinned at first commit). A version
   * rewrites ONLY the buckets its delta touches — upsert IO is
   * O(delta + touched buckets), not O(table), which is what makes
   * continuous CDC viable on a 100 TB snapshot. Untouched buckets keep
@@ -59,7 +60,7 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod, when}
   * touching the store. Deployments on a filesystem that does guarantee
   * atomic create-once (or that route commits through a conditional-PUT
   * / commit-service layer, the Delta/Iceberg answer on S3) extend the
-  * list via `spark.graft.snapshot.atomicCreateSchemes`; a genuinely
+  * list via `Knobs.snapshotAtomicCreateSchemes`; a genuinely
   * single-writer S3 deployment may do the same, accepting that the
   * multi-writer guarantee is then the deployer's, not the store's.
   *
@@ -72,7 +73,7 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod, when}
   * (the manifest itself is already safe in its own file, so no
   * manifest content can ever be half-written), and writers refuse the
   * slot loudly while the marker is younger than
-  * `spark.graft.snapshot.commitGraceMs` (default 5 min), then
+  * `Knobs.snapshotCommitGraceMs` (default 5 min), then
   * AUTO-HEAL — re-verify emptiness and delete the abandoned marker,
   * reopening the slot — so the store keeps committing with no manual
   * repair step. To settle the one interleave healing leaves open (a
@@ -103,7 +104,7 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod, when}
   * Claims are an ADVISORY fast-fail so a contender aborts before
   * paying for a doomed merge, not a correctness mechanism: an empty
   * create-once file per slot carrying the writer's token. A claim
-  * older than `spark.graft.snapshot.claimTtlMs` (default 30 min) is a
+  * older than `Knobs.snapshotClaimTtlMs` (default 30 min) is a
   * crashed writer's leftover and is reclaimed (delete + re-create +
   * read-back ownership verify — the read-back keeps simultaneous
   * reclaimers from both believing they won in all but a vanishing
@@ -205,9 +206,7 @@ object SnapshotStore {
   private def requireAtomicCreate(spark: SparkSession, f: FileSystem,
                                   dir: String): Unit = {
     val scheme = Option(f.getUri.getScheme).getOrElse("file").toLowerCase
-    val extra = spark.conf
-      .get("spark.graft.snapshot.atomicCreateSchemes", "")
-      .split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).toSet
+    val extra = Knobs.snapshotAtomicCreateSchemes.get(spark)
     if (!(knownAtomicCreateSchemes ++ extra)(scheme))
       throw new IllegalStateException(
         s"snapshot store at $dir sits on scheme '$scheme', which is not " +
@@ -218,7 +217,7 @@ object SnapshotStore {
           "Route commits through a conditional-PUT/commit-service layer, " +
           "or — if this filesystem does guarantee atomic create-once, or " +
           "the deployment is provably single-writer — allow the scheme " +
-          "via spark.graft.snapshot.atomicCreateSchemes")
+          s"via ${Knobs.snapshotAtomicCreateSchemes.key}")
   }
 
   private def bucketDirName(b: Int): String = s"_bucket=$b"
@@ -234,18 +233,6 @@ object SnapshotStore {
 
   private def newToken(): String =
     java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-
-  private def confBuckets(spark: SparkSession): Int = {
-    val raw = spark.conf.get("spark.graft.snapshot.buckets", "16")
-    val n =
-      try raw.toInt
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.snapshot.buckets must be an int, got '$raw'")
-      }
-    require(n >= 1, s"spark.graft.snapshot.buckets must be >= 1, got $n")
-    n
-  }
 
   /** Highest committed version, if any commit exists. An in-flight
     * commit (marker created, token not yet landed) is NOT committed:
@@ -277,7 +264,7 @@ object SnapshotStore {
           s"marker exists but carries no winner token yet (age " +
           s"${markerAgeMs(f, mp) / 1000}s). Readers serve the previous " +
           "version; a writer reopens the slot automatically once the " +
-          "marker outlives spark.graft.snapshot.commitGraceMs. Do NOT " +
+          s"marker outlives ${Knobs.snapshotCommitGraceMs.key}. Do NOT " +
           "delete the marker by hand unless the writer is confirmed dead.")
     }
     try {
@@ -476,9 +463,7 @@ object SnapshotStore {
     // after OUR close settles the stalled-writer interleave, class doc)
     val slotMarker = markerPath(dir, slot)
     if (f.exists(slotMarker) && markerToken(f, slotMarker).isEmpty) {
-      val graceMs = spark.conf
-        .getOption("spark.graft.snapshot.commitGraceMs")
-        .map(_.toLong).getOrElse(5L * 60 * 1000)
+      val graceMs = Knobs.snapshotCommitGraceMs.get(spark)
       val age = markerAgeMs(f, slotMarker)
       if (age >= graceMs) {
         if (markerToken(f, slotMarker).isEmpty) f.delete(slotMarker, false)
@@ -497,7 +482,7 @@ object SnapshotStore {
     // bucketed stores (numBuckets IS the content-domain size, e.g. the
     // IVF cell count); once committed the manifest's count is law
     val nBuckets = head.map(_.numBuckets)
-      .orElse(numBuckets).getOrElse(confBuckets(spark))
+      .orElse(numBuckets).getOrElse(Knobs.snapshotBuckets.get(spark))
     // placement mode is as much "law" as the bucket count: a delta
     // placed by a different rule than the committed rows would merge
     // against the wrong buckets and strand live rows
@@ -679,7 +664,7 @@ object SnapshotStore {
   /** Claim `slot` via a create-once file carrying this writer's token —
     * the advisory OCC entry gate (commit correctness is the log-entry
     * CAS; this only fails contenders before they pay for a merge). An
-    * existing claim younger than `spark.graft.snapshot.claimTtlMs`
+    * existing claim younger than `Knobs.snapshotClaimTtlMs`
     * (default 30 min) is a live contender → loud loser. An older one is
     * a crashed writer's leftover (every in-process exit deletes its
     * claim) → reclaimed by delete + re-create + read-back: the re-read
@@ -692,8 +677,7 @@ object SnapshotStore {
                            slot: Long, token: String): Unit = {
     f.mkdirs(new Path(s"$dir/_claims"))
     val p = claimPath(dir, slot)
-    val ttlMs = spark.conf.getOption("spark.graft.snapshot.claimTtlMs")
-      .map(_.toLong).getOrElse(30L * 60 * 1000)
+    val ttlMs = Knobs.snapshotClaimTtlMs.get(spark)
     def tryCreate(): Boolean =
       try {
         val out = f.create(p, false)

@@ -1243,7 +1243,7 @@ object StreamingPipeline extends Serializable {
     * bounded by the bucket count at any batch count), and because the
     * index grows monotonically, the stream ROLLS GENERATIONS as it
     * outgrows its bucketing: after each index commit, if the head's
-    * mean bucket size exceeds `spark.graft.stream.scrubMaxBucketBytes`
+    * mean bucket size exceeds `Knobs.streamScrubMaxBucketBytes`
     * (default 256 MB), the store is `rebucket`ed into the next
     * generation dir (`<indexDir>-g1`, `-g2`, …) at 2× the buckets, and
     * every later batch resolves the live generation via
@@ -1332,7 +1332,7 @@ object StreamingPipeline extends Serializable {
 
   /** Roll the scrub index into its next generation (2× buckets) once the
     * head's MEAN bucket size exceeds
-    * `spark.graft.stream.scrubMaxBucketBytes` (default 256 MB) — the
+    * `Knobs.streamScrubMaxBucketBytes` (default 256 MB) — the
     * monotone-growth counterpart of the store's per-commit retention:
     * retention bounds the data-DIR count at any batch count; the roll
     * bounds the per-bucket (and so per-probe) byte size at any INDEX
@@ -1344,9 +1344,7 @@ object StreamingPipeline extends Serializable {
     */
   private def maybeRollScrubIndex(s: SparkSession, base: String,
                                   genDir: String): Unit = {
-    val maxBucketBytes = s.conf
-      .getOption("spark.graft.stream.scrubMaxBucketBytes")
-      .map(_.toLong).getOrElse(256L * 1024 * 1024)
+    val maxBucketBytes = graft.Knobs.streamScrubMaxBucketBytes.get(s)
     graft.pipeline.SnapshotStore.manifest(s, genDir).foreach { m =>
       val fs = new org.apache.hadoop.fs.Path(genDir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)

@@ -234,10 +234,10 @@ class DedupSpec extends SparkSpec {
       // boilerplate-grade outliers would be cut. Same pairs as the
       // exact default path, and identical to setting the derived value
       // explicitly.
-      val derived = ops.AutoKnob.fromP99(
+      val derived = Knobs.shingleDfCutoff.fromP99(
         ops.Dedup.shingles(spark, dir).groupBy(col("shingle"))
           .agg(count(lit(1)).as("df")),
-        "df", mult = 8, floor = 8, fallback = 8)
+        "df")
       assert(derived === 24, s"8 × p99(df=3) = 24 expected, got $derived")
       spark.conf.set("spark.graft.shingle.dfCutoff", "auto")
       assert(pairs() === dflt)
@@ -249,11 +249,11 @@ class DedupSpec extends SparkSpec {
   test("AutoKnob.fromP99: tail multiple, floor clamp, empty fallback") {
     val sizes = (1 to 100).map(_.toLong).toDF("n")
     // p99 of 1..100 ≈ 99 → 2×99 = 198
-    assert(ops.AutoKnob.fromP99(sizes, "n", 2, 8, 64) === 198)
+    assert(Knobs.graphWedgeCap.fromP99(sizes, "n") === 198)
     // floor wins when the tail is small
-    assert(ops.AutoKnob.fromP99(Seq(1L, 1L, 2L).toDF("n"), "n", 2, 8, 64) === 8)
+    assert(Knobs.graphWedgeCap.fromP99(Seq(1L, 1L, 2L).toDF("n"), "n") === 8)
     // empty distribution → fixed fallback
-    assert(ops.AutoKnob.fromP99(sizes.filter(col("n") < 0), "n", 2, 8, 64) === 64)
+    assert(Knobs.graphWedgeCap.fromP99(sizes.filter(col("n") < 0), "n") === 64)
   }
 
   test("dedup_substring: content-defined chunks catch offset-SHIFTED duplication") {

@@ -359,8 +359,7 @@ class GraphSpec extends SparkSpec {
       .distinct()
     val deg = und.select($"a".as("u")).union(und.select($"b".as("u")))
       .groupBy($"u").agg(count(lit(1)).as("deg"))
-    val derived = ops.AutoKnob.fromP99(deg, "deg", mult = 2, floor = 8,
-      fallback = 64)
+    val derived = Knobs.graphWedgeCap.fromP99(deg, "deg")
     try {
       spark.conf.set("spark.graft.graph.wedgeCap", "auto")
       val auto = links()
