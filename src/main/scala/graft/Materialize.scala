@@ -1,9 +1,12 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
-/** Materialization seam for shared sub-frames.
+/** Materialization seam for shared sub-frames and iterative rounds.
   *
   * Several operators compute a frame that is consumed by multiple joins
   * (shingle sets, MinHash/SimHash signatures, LSH bands): without a
@@ -22,48 +25,44 @@ import org.apache.spark.storage.StorageLevel
   * finishes (Spark's CacheManager holds a reference, so un-released
   * cache entries would otherwise accumulate across an 85-query run),
   * and releasing one query never touches a concurrent query's staged
-  * frames.
+  * frames. Outside any bracket, staging only persists. Converging loops
+  * (bfs, k-core, connected components) run their rounds through
+  * `fixpoint`.
   */
 object Materialize {
 
-  /** One query's staged materializations. Staging is tracked per scope
-    * so releasing one query's frames cannot touch a CONCURRENT query's
-    * live cache — operators call `stage` without a token, and the scope
-    * is resolved from the calling thread (all staging happens at
-    * plan-construction time on the query's driver thread).
+  /** The calling thread's staged frames (null outside `scoped`): all
+    * staging happens at plan-construction time on the query's driver
+    * thread, so operators call `stage` without a token.
     */
-  final class Scope private[Materialize] () {
-    private[Materialize] val staged =
-      new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  }
-
-  /** Fallback scope for callers outside any `scoped` bracket — the
-    * original process-global, single-threaded-runner behavior.
-    */
-  private val globalScope = new Scope
-  private val current = ThreadLocal.withInitial[Scope](() => globalScope)
+  private val current = new ThreadLocal[ConcurrentLinkedQueue[DataFrame]]
 
   /** Run `body` with a fresh staging scope bound to this thread, then
     * release everything it staged (cache entries unpersisted) — even on
     * exception. Nesting restores the outer scope. This is the bracket Verify/Bench wrap each query in;
     * concurrent runners get per-query isolation for free by each
-    * wrapping their own thread's work.
+    * wrapping their own thread's work. `blocking = false`: block cleanup
+    * proceeds async while the next query starts.
     */
   def scoped[T](body: => T): T = {
     val prev = current.get()
-    val s = new Scope
+    val s = new ConcurrentLinkedQueue[DataFrame]()
     current.set(s)
     try body
     finally {
       current.set(prev)
-      release(s)
+      var df = s.poll()
+      while (df != null) {
+        df.unpersist(blocking = false)
+        df = s.poll()
+      }
     }
   }
 
   /** Stage a multiply-consumed frame behind a materialization barrier. */
   def stage(df: DataFrame): DataFrame = {
     df.persist(StorageLevel.MEMORY_AND_DISK)
-    current.get().staged.add(df)
+    Option(current.get()).foreach(_.add(df))
     df
   }
 
@@ -87,25 +86,60 @@ object Materialize {
     * grows exponentially with round count and Catalyst tree-walks hang
     * long before the data does. Unlike `localCheckpoint()`, the RDD
     * lineage underneath is preserved — lost partitions recompute from
-    * their parents — only the SQL plan is cut.
+    * their parents — only the SQL plan is cut. The cut loses the
+    * frame's output partitioning; a frame that must keep it (a join
+    * side reused every round) goes through plain `stage`.
     */
   def stageIterative(df: DataFrame): DataFrame =
     stage(df.sparkSession.createDataFrame(df.rdd, df.schema))
 
-  /** Release every frame staged in the CALLING THREAD's current scope
-    * (the process-global fallback scope outside any `scoped` bracket —
-    * the original single-threaded-runner contract). Prefer `scoped {}`,
-    * which releases automatically and isolates concurrent queries.
-    * `blocking = false`: block cleanup proceeds async while the next
-    * query starts.
+  /** Unpersist a staged frame now and forget it in the calling thread's
+    * scope, so a long loop's scope does not grow with its round count.
     */
-  def releaseAll(): Unit = release(current.get())
+  def release(df: DataFrame): Unit = {
+    df.unpersist(blocking = false)
+    Option(current.get()).foreach(_.remove(df))
+  }
 
-  private def release(s: Scope): Unit = {
-    var df = s.staged.poll()
-    while (df != null) {
-      df.unpersist(blocking = false)
-      df = s.staged.poll()
+  /** One step outside a loop: cut and stage `next`, build its cache with
+    * ONE action that also evaluates `probe`, and only then release `prev`
+    * (the frame it replaces, whose cache `next` may still read).
+    *
+    * @return (staged `next`, probe row: row count first, then `probe`)
+    */
+  def advance(prev: Option[DataFrame], next: DataFrame,
+              probe: Column*): (DataFrame, Row) = {
+    val out = stageIterative(next)
+    val row = out.agg(count(lit(1)), probe: _*).head()
+    prev.foreach(release)
+    (out, row)
+  }
+
+  /** Iterate `round` from `init` until `done`. Round r (from 1) stages
+    * `round(prev, r)` as `advance` does — cut, one action for cache and
+    * probe row — then asks `done(r, row, prev, next)`, and only then
+    * releases `prev` (so the stop rule may still read both frames).
+    * Reaching `maxRounds` without `done` fails with an
+    * IllegalArgumentException naming `what`: a loop cut short would
+    * return a non-fixpoint.
+    *
+    * @return (the last round's staged frame, rounds taken)
+    */
+  def fixpoint(init: DataFrame, maxRounds: Int, what: String)
+              (round: (DataFrame, Int) => DataFrame)
+              (probe: Column*)
+              (done: (Int, Row, DataFrame, DataFrame) => Boolean): (DataFrame, Int) = {
+    var cur = init
+    var rounds = 0
+    var converged = false
+    while (!converged) {
+      require(rounds < maxRounds, s"$what did not converge within $maxRounds rounds")
+      rounds += 1
+      val (next, row) = advance(None, round(cur, rounds), probe: _*)
+      converged = done(rounds, row, cur, next)
+      release(cur)
+      cur = next
     }
+    (cur, rounds)
   }
 }

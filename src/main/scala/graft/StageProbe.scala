@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Per-STAGE attribution for registry queries: runs each query under the
   * bench's noop-sink action and prints every completed stage's wall,
@@ -34,7 +34,9 @@ object StageProbe {
     require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}")
     val spark = GraftSession.get()
     val rows = mutable.ArrayBuffer.empty[StageRow]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
         val m = si.taskMetrics
@@ -59,6 +61,7 @@ object StageProbe {
       .write.format("noop").mode("overwrite").save()
     for (name <- names; r <- 1 to reps) {
       rows.synchronized(rows.clear())
+      jobs.set(0)
       System.gc()
       val t0 = System.nanoTime()
       Materialize.scoped {
@@ -68,7 +71,7 @@ object StageProbe {
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(300) // let stage-completed events drain
       val snap = rows.synchronized(rows.toVector)
-      println(f"== STAGEPROBE $name rep $r wall=$wall%.2fs stages=${snap.size} " +
+      println(f"== STAGEPROBE $name rep $r wall=$wall%.2fs jobs=${jobs.get} stages=${snap.size} " +
         f"cpuSum=${snap.map(_.cpuMs).sum / 1e3}%.1fs " +
         f"deserCpuSum=${snap.map(_.deserCpuMs).sum / 1e3}%.1fs " +
         f"deserWallSum=${snap.map(_.deserMs).sum / 1e3}%.1fs ==")

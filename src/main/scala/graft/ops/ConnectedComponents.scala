@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   * read off directly as (node → root) labels.
   *
   * Edges shuffle on the node id each round — no driver-side graph state;
-  * the only driver value per round is the convergence count. Per-round
-  * frames go through the Materialize seam's plan-truncating stage, so
-  * O(log n) rounds of plan do not stack.
+  * the only driver value per round is the convergence signature. The
+  * rounds run through `Materialize.fixpoint`, whose per-round plan cut
+  * keeps O(log n) rounds of plan from stacking.
   */
 object ConnectedComponents {
 
@@ -40,33 +40,33 @@ object ConnectedComponents {
     // pair-mining plan must not be re-embedded in every round's star
     // plans). Self-loops are KEPT in this staged frame so `nodes` sees a
     // node whose only edges are self-loops — the scaladoc guarantees
-    // every node of `pairs` appears in the labels — and only `edges`,
-    // the star loop's input, filters them out. Such a node then labels
-    // itself via the left-join fallback below, which is its component.
-    val canon = Materialize.stageIterative(
+    // every node of `pairs` appears in the labels — and only the star
+    // loop's input filters them out. Such a node then labels itself via
+    // the left-join fallback below, which is its component.
+    val (canon, canonRow) = Materialize.advance(None,
       pairs.toDF("a", "b")
         .select(greatest(col("a"), col("b")).as("u"),
           least(col("a"), col("b")).as("v"))
         .distinct())
-    // exact edge count (builds canon's cache — the count the convergence
-    // loop would pay anyway): sizes the per-round star frames below with
-    // a floor-1 tight width (Sizing.tightPartitionsForRows) — every
-    // round re-scans its staged predecessor, so conf-width rounds pay
-    // ~32 near-empty task launches per scan per round at test scale
-    // (star output is bounded by the edge count, so one width serves
-    // all rounds; it grows with the corpus like any sized exchange)
-    val canonRows = canon.count()
+    // exact edge count (from building canon's cache): sizes the
+    // per-round star frames below with a floor-1 tight width
+    // (Sizing.tightPartitionsForRows) — every round re-scans its staged
+    // predecessor, so conf-width rounds pay ~32 near-empty task launches
+    // per scan per round at test scale (star output is bounded by the
+    // edge count, so one width serves all rounds; it grows with the
+    // corpus like any sized exchange)
+    val canonRows = canonRow.getLong(0)
     val tightE = graft.Sizing.tightPartitionsForRows(spark, canonRows * 2, 48)
-    var edges = canon.filter(col("u") =!= col("v"))
-    val nodes = Materialize.stage(
+    // nodes is consumed only AFTER the loop (label extraction); build its
+    // cache now from canon's still-warm cache, or the whole upstream
+    // pair-mining pipeline re-runs at label time. Staged uncut: a cut
+    // would drop the coalesced output partitioning, which at one
+    // partition lets the consumers' final sort skip a range exchange.
+    val nodes = Materialize.stageEager(
       canon.select(col("u").as("node"))
         .union(canon.select(col("v").as("node")))
         .distinct()
         .coalesce(graft.Sizing.tightPartitionsForRows(spark, canonRows * 2, 24)))
-    // nodes is consumed only AFTER the loop (label extraction); build its
-    // cache now from canon's still-warm cache, or the whole upstream
-    // pair-mining pipeline re-runs at label time
-    nodes.count()
 
     // Emission is join-based, never collect_set: a high-degree node's
     // neighborhood must stay spread across rows (one array per celebrity
@@ -104,33 +104,24 @@ object ConnectedComponents {
         .distinct()
     }
 
-    var rounds = 0
-    var converged = false
-    // convergence check costs ONE cheap agg action per round: an
-    // order-independent (count, hash-XOR) signature of the edge set
-    // (XOR: commutative, overflow-free under ANSI mode; the frames are
-    // distinct so duplicates can't cancel). Only when consecutive
-    // signatures collide is set equality CONFIRMED with an anti-join
-    // (counts equal + no new edges ⟺ equal sets), so a hash collision
-    // can never false-converge.
+    // convergence check costs ONE cheap agg, fused into the action that
+    // builds each round's cache: an order-independent (count, hash-XOR)
+    // signature of the edge set (XOR: commutative, overflow-free under
+    // ANSI mode; the frames are distinct so duplicates can't cancel).
+    // Only when consecutive signatures collide is set equality CONFIRMED
+    // with an anti-join (counts equal + no new edges ⟺ equal sets), so a
+    // hash collision can never false-converge.
     var prevSig: (Long, Long) = null
-    while (!converged && rounds < maxRounds) {
-      // stageIterative: plan-truncating — round r's plan must not embed
-      // round r-1's (analysis cost would grow exponentially in rounds)
-      val next = Materialize.stageIterative(
-        smallStar(largeStar(edges)).coalesce(tightE))
-      val row = next.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
+    val (edges, rounds) = Materialize.fixpoint(
+      canon.filter(col("u") =!= col("v")), maxRounds, "connected components")(
+      (e, _) => smallStar(largeStar(e)).coalesce(tightE))(
+      expr("bit_xor(xxhash64(u, v))")) { (_, row, prev, next) =>
       val sig = (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-      if (sig == prevSig)
-        converged = next.join(edges, Seq("u", "v"), "left_anti").isEmpty
+      val same = sig == prevSig &&
+        next.join(prev, Seq("u", "v"), "left_anti").isEmpty
       prevSig = sig
-      // the superseded round's blocks are dead now — free them instead
-      // of letting O(log n) rounds of cache stack up
-      edges.unpersist(blocking = false)
-      edges = next
-      rounds += 1
+      same
     }
-    require(converged, s"connected components did not converge in $maxRounds rounds")
 
     // fixed point is depth-1 stars rooted at component minima; isolated
     // root nodes label themselves

@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.DecimalType
   * the source node id) plus one anti-join against the visited set — no
   * driver-side graph state, no adjacency collect. The edge frame is staged
   * once (at 100 TB it would live bucketed on `u`, making the per-round
-  * join co-located); the frontier is the only frame that changes, and on
+  * join co-located); the visited (node, hops) frame is the only frame
+  * that changes — its rows at the last hop are the frontier — and on
   * high-degree nodes AQE skew-splits the join. Rounds are bounded by
   * min(graph diameter, maxHops) — level-synchronous discovery guarantees
   * the first hop count assigned to a node is its minimum, which is exactly
@@ -44,12 +45,12 @@ object Graph extends QueryModule {
           width: Option[Int] = None,
           edgeRows: Option[Long] = None): DataFrame = {
     val spark = edges.sparkSession
-    // tight width for the per-round distance/frontier frames: every
-    // round re-scans the staged dist cache (anti-join build side) and
-    // the staged frontier, so their partition counts are paid in task
-    // launches once per round. The frontier is bounded by the node set,
-    // itself bounded by the edge mass — size from the caller's edge-row
-    // estimate with a floor of 1 (Sizing.tightPartitionsForRows
+    // tight width for the per-round distance frame: every round
+    // re-scans its staged cache (frontier filter, anti-join build side,
+    // union), so its partition count is paid in task launches once per
+    // round. The frame is bounded by the node set, itself bounded by
+    // the edge mass — size from the caller's edge-row estimate with a
+    // floor of 1 (Sizing.tightPartitionsForRows
     // scaladoc has the measured storm); absent an estimate (ad-hoc
     // graphs), 1 target partition of node ids is ~4 M nodes — still the
     // right default for a frame consumed by broadcast-side builds.
@@ -72,38 +73,25 @@ object Graph extends QueryModule {
     val e = Materialize.stage(width
       .fold(edges.toDF("u", "v").repartition(col("u")))(n =>
         edges.toDF("u", "v").repartition(n, col("u"))))
-    var dist = Materialize.stageIterative(
+    val (seeded, _) = Materialize.advance(None,
       seeds.toDF("node").distinct().select(col("node"), lit(0).cast("int").as("hops"))
         .coalesce(distTight))
-    dist.count()
-    var frontier = dist
-    var hop = 0
-    var exhausted = false
-    while (hop < maxHops && !exhausted) {
-      hop += 1
-      // neighbors of the frontier not yet visited get distance `hop`;
-      // distinct() before the anti-join so a node reached via many
-      // frontier edges shuffles once, not per-edge
-      val next = Materialize.stageIterative(
+    if (maxHops < 1) seeded
+    else Materialize.fixpoint(seeded, maxHops, "bfs") { (dist, hop) =>
+      // neighbors of the frontier (the rows one hop back) not yet
+      // visited get distance `hop`; distinct() before the anti-join so a
+      // node reached via many frontier edges shuffles once, not per-edge
+      val frontier = dist.filter(col("hops") === hop - 1)
+      dist.union(
         frontier.join(e, frontier("node") === e("u"))
           .select(e("v").as("node")).distinct()
           .join(dist, Seq("node"), "left_anti")
-          .select(col("node"), lit(hop).cast("int").as("hops"))
-          .coalesce(distTight))
-      if (next.isEmpty) {
-        exhausted = true
-        next.unpersist(blocking = false)
-      } else {
-        val grown = Materialize.stageIterative(dist.union(next)
-          .coalesce(distTight))
-        grown.count() // materialize before freeing the frames it reads
-        if (!(frontier eq dist)) frontier.unpersist(blocking = false)
-        dist.unpersist(blocking = false)
-        dist = grown
-        frontier = next
-      }
-    }
-    dist
+          .select(col("node"), lit(hop).cast("int").as("hops")))
+        .coalesce(distTight)
+    }(max(col("hops"))) { (hop, row, _, _) =>
+      // no row at `hops = hop`: the frontier emptied (or the bound hit)
+      hop == maxHops || row.isNullAt(1) || row.getInt(1) < hop
+    }._1
   }
 
   /** Fixed-point integer PageRank: `iters` damped rounds over directed
@@ -1299,10 +1287,8 @@ object Graph extends QueryModule {
     * exactly the same nodes each round. An empty frontier IS the
     * fixpoint, and the surviving (node, deg) frame IS the answer — deg
     * was maintained exactly, so no final re-aggregate over the edges
-    * either. Each round's node frame is materialized via stageIterative
-    * (truncating the logical plan, so round N's analysis cost does not
-    * grow with N) and the previous round's cache is freed as soon as
-    * its successor is materialized.
+    * either. The rounds run through `Materialize.fixpoint`, whose plan
+    * cut keeps round N's analysis cost from growing with N.
     */
   def kcore(edges: DataFrame, k: Int, maxRounds: Int = 64,
             width: Option[Int] = None): DataFrame = {
@@ -1324,30 +1310,42 @@ object Graph extends QueryModule {
     // measured storm). Counts are data-derived: the edge width comes
     // from the initial materialization count, the node width from the
     // live survivor count each round, so both grow with the corpus.
-    var cur = Materialize.stageIterative(
+    val (sym, symRow) = Materialize.advance(None,
       und.select(col("a").as("u"), col("b").as("v"))
         .union(und.select(col("b").as("u"), col("a").as("v"))))
-    var curRows = cur.count()
+    var curRows = symRow.getLong(0)
     val curTight = Sizing.tightPartitionsForRows(spark, curRows, 48)
-    if (curTight < cur.rdd.getNumPartitions) {
-      val packed = Materialize.stageIterative(cur.coalesce(curTight))
-      packed.count()
-      cur.unpersist(blocking = false)
-      cur = packed
-    }
+    var cur =
+      if (curTight < sym.rdd.getNumPartitions)
+        Materialize.advance(Some(sym), sym.coalesce(curTight))._1
+      else sym
     def nodeTight(rows: Long): Int =
       Sizing.tightPartitionsForRows(spark, rows, 24)
     // the ONLY full degree aggregate: from here deg is maintained by
     // per-round frontier-edge subtraction, never recomputed
-    var deg = Materialize.stageIterative(
+    val (deg0, deg0Row) = Materialize.advance(None,
       cur.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .coalesce(nodeTight(curRows)))
-    var alive = deg.count()
+    var alive = deg0Row.getLong(0)
     var lastCompact = alive
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
+    // the action that builds each round's node frame also counts next
+    // round's frontier (deg < k among the new degrees), so the loop stops
+    // the round the frontier empties, not one confirming round later
+    val (deg, _) = Materialize.fixpoint(deg0, maxRounds, "k-core") { (deg, r) =>
+      // geometric compaction: once the alive set has halved since the
+      // last rewrite, drop dead edges so later rounds scan a frame
+      // proportional to the SURVIVORS — total rewrite work across the
+      // peel telescopes to O(E)
+      if (r > 1 && alive * 2 <= lastCompact) {
+        // surviving edges ≤ current cur rows; halve the estimate with
+        // the alive set (the compaction fires exactly when it halved)
+        curRows = curRows / 2 max 1L
+        cur = Materialize.advance(Some(cur),
+          cur.join(deg.select(col("u")), Seq("u"), "left_semi")
+            .join(deg.select(col("u").as("v")), Seq("v"), "left_semi")
+            .coalesce(Sizing.tightPartitionsForRows(spark, curRows, 48)))._1
+        lastCompact = alive
+      }
       // ONE fused job per round. The frontier (deg < k) is a filter
       // over the CACHED node frame — never staged, never a join: the
       // survivors are just deg >= k, and a survivor x loses exactly
@@ -1363,51 +1361,23 @@ object Graph extends QueryModule {
       // mass itself moves nowhere (AQE broadcasts the frontier for
       // the semi join).
       val badV = deg.filter(col("deg") < k).select(col("u").as("v"))
-      val next = Materialize.stageIterative(
-        deg.filter(col("deg") >= k)
-          .select(col("u"), col("deg"), lit(1).as("_base"))
-          .unionByName(
-            cur.join(badV, Seq("v"), "left_semi")
-              .select(col("u"), lit(-1L).as("deg"), lit(0).as("_base")))
-          .groupBy(col("u"))
-          .agg(sum(col("deg")).as("deg"), max(col("_base")).as("_b"))
-          .filter(col("_b") === 1).select(col("u"), col("deg"))
-          // tight width from the CURRENT alive count: survivors ≤ alive
-          .coalesce(nodeTight(alive)))
-      // materialize before freeing inputs; the SAME action also counts
-      // next round's frontier (deg < k among the new degrees), so the
-      // loop stops the round the frontier empties instead of running
-      // one more full confirming round (r12: the old nextAlive == alive
-      // probe only detected convergence one round late)
-      val probe = next.agg(count(lit(1)),
-        sum(when(col("deg") < k, 1L).otherwise(0L))).head()
-      val nextAlive = probe.getLong(0)
-      val nextBad = if (probe.isNullAt(1)) 0L else probe.getLong(1)
-      deg.unpersist(blocking = false)
-      deg = next
-      converged = nextBad == 0L
-      alive = nextAlive
-      // geometric compaction: once the alive set has halved since the
-      // last rewrite, drop dead edges so later rounds scan a frame
-      // proportional to the SURVIVORS — total rewrite work across the
-      // peel telescopes to O(E)
-      if (!converged && alive * 2 <= lastCompact) {
-        // surviving edges ≤ current cur rows; halve the estimate with
-        // the alive set (the compaction fires exactly when it halved)
-        curRows = curRows / 2 max 1L
-        val compacted = Materialize.stageIterative(
-          cur.join(deg.select(col("u")), Seq("u"), "left_semi")
-            .join(deg.select(col("u").as("v")), Seq("v"), "left_semi")
-            .coalesce(Sizing.tightPartitionsForRows(spark, curRows, 48)))
-        compacted.count()
-        cur.unpersist(blocking = false)
-        cur = compacted
-        lastCompact = alive
-      }
+      deg.filter(col("deg") >= k)
+        .select(col("u"), col("deg"), lit(1).as("_base"))
+        .unionByName(
+          cur.join(badV, Seq("v"), "left_semi")
+            .select(col("u"), lit(-1L).as("deg"), lit(0).as("_base")))
+        .groupBy(col("u"))
+        .agg(sum(col("deg")).as("deg"), max(col("_base")).as("_b"))
+        .filter(col("_b") === 1).select(col("u"), col("deg"))
+        // tight width from the CURRENT alive count: survivors ≤ alive
+        .coalesce(nodeTight(alive))
+    }(sum(when(col("deg") < k, 1L).otherwise(0L))) { (_, row, _, _) =>
+      alive = row.getLong(0)
+      row.isNullAt(1) || row.getLong(1) == 0L
     }
-    cur.unpersist(blocking = false)
-    // a silent non-fixpoint would emit a superset of the core — fail loudly
-    require(converged, s"k-core did not converge within $maxRounds rounds")
+    // a silent non-fixpoint would emit a superset of the core, so the
+    // round cap fails loudly; the edge frame is dead once deg is final
+    Materialize.release(cur)
     deg.select(col("u"), col("deg").as("core_deg"))
   }
 

@@ -107,7 +107,8 @@ object Similarity extends QueryModule {
     *             the sum's direction, so summing suffices).
     * Cells that lose every member keep their previous centroid (left
     * join fallback) so K never shrinks. Plans are truncated per round
-    * (`stageIterative`) exactly like the CC loop. Double-sum partials
+    * (`stageIterative`); the round count is fixed, so no per-round
+    * convergence action runs. Double-sum partials
     * make results run-stable only up to float association — this path
     * is validated by measured recall against brute force
     * (SimilaritySpec), not by the value-level DuckDB twin, which pins

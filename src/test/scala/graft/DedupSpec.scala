@@ -194,6 +194,30 @@ class DedupSpec extends SparkSpec {
     assert(rounds <= bound, s"took $rounds rounds, bound $bound")
   }
 
+  test("connected components fail at the round cap, naming the operator") {
+    val chain = (0L until 49L).map(i => (i, i + 1)).toDF("src", "dst")
+    val e = intercept[IllegalArgumentException](Materialize.scoped {
+      ops.ConnectedComponents.run(chain, maxRounds = 1)
+    })
+    assert(e.getMessage.contains("connected components"), e.getMessage)
+  }
+
+  test("connected components release superseded rounds: cache does not grow with rounds") {
+    // cached entries left inside the scope after CC returns: the same
+    // for a chain that takes more rounds, so every superseded round's
+    // cache was freed
+    def cachedAfter(n: Long): (Int, Int) = Materialize.scoped {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val (_, rounds) = ops.ConnectedComponents.run(
+        (0L until n - 1L).map(i => (i, i + 1)).toDF("src", "dst"))
+      (spark.sparkContext.getPersistentRDDs.size - before, rounds)
+    }
+    val (small, smallRounds) = cachedAfter(6)
+    val (large, largeRounds) = cachedAfter(50)
+    assert(largeRounds > smallRounds)
+    assert(small === large)
+  }
+
   test("connected components keep disjoint components separate") {
     val edges = Seq((0L, 1L), (1L, 2L), (10L, 11L), (12L, 11L), (20L, 21L))
       .toDF("a", "b")

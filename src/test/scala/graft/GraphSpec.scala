@@ -270,6 +270,25 @@ class GraphSpec extends SparkSpec {
     assert(core(g, 3) === Map.empty[Long, Long])
   }
 
+  test("kcore fails at the round cap, naming the operator") {
+    // the path peels over several rounds at k=2: one round is not enough
+    val path = Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L)
+    val e = intercept[IllegalArgumentException](Materialize.scoped {
+      Graph.kcore(path.toDF("u", "v"), 2, maxRounds = 1)
+    })
+    assert(e.getMessage.contains("k-core"), e.getMessage)
+  }
+
+  test("empty edge frame: bfs, kcore, connected components and label propagation return empty") {
+    val none = Seq.empty[(Long, Long)].toDF("u", "v")
+    Materialize.scoped {
+      assert(Graph.bfs(none, none.select(col("u")), 4).isEmpty)
+      assert(Graph.kcore(none, 2).isEmpty)
+      assert(ops.ConnectedComponents.run(none)._1.isEmpty)
+      assert(Graph.labelPropagation(none, 3).isEmpty)
+    }
+  }
+
   private def lpa(edges: Seq[(Long, Long)], rounds: Int) = Materialize.scoped {
     Graph.labelPropagation(edges.toDF("u", "v"), rounds)
       .as[(Long, Long)].collect().toMap

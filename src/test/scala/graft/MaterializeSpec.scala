@@ -47,12 +47,4 @@ class MaterializeSpec extends SparkSpec {
     assert(bFrame.storageLevel == StorageLevel.NONE,
       "B's scope end must release B's staged frame")
   }
-
-  test("releaseAll outside any scope drains only the global fallback scope") {
-    val df = Materialize.stage(spark.range(100).toDF("id"))
-    df.count()
-    assert(df.storageLevel != StorageLevel.NONE)
-    Materialize.releaseAll()
-    assert(df.storageLevel == StorageLevel.NONE)
-  }
 }
