@@ -90,7 +90,7 @@ object Materialize {
     * frame's output partitioning; a frame that must keep it (a join
     * side reused every round) goes through plain `stage`.
     */
-  def stageIterative(df: DataFrame): DataFrame =
+  private def stageIterative(df: DataFrame): DataFrame =
     stage(df.sparkSession.createDataFrame(df.rdd, df.schema))
 
   /** Unpersist a staged frame now and forget it in the calling thread's

@@ -61,8 +61,8 @@ object Graph extends QueryModule {
     // so every round's frontier-expansion join exchanges ONLY the
     // frontier side and reads the edge cache co-partitioned — without
     // this the (100 TB-scale) edge table re-shuffles every round.
-    // stageIterative would cut the plan to a LogicalRDD and LOSE the
-    // partitioning; the edge plan is referenced once per round without
+    // A round cut (`Materialize.advance`) would make it a LogicalRDD and
+    // LOSE the partitioning; the edge plan is referenced once per round without
     // nesting, so the uncut plan stays analyzer-safe.
     // `width`: sized partition count for that staged edge exchange
     // (VERDICT r11 item 7 — the same seam pagerank/kcore/label-prop
@@ -720,8 +720,8 @@ object Graph extends QueryModule {
     // are aggregated once, then maintained by subtracting each round's
     // frontier-incident edge counts — the same fixpoint, reached with
     // one cached-edge pass per round instead of the oracle's full
-    // re-windows (driver convergence loop, plan truncated per round via
-    // stageIterative); the oracle unrolls 18 rounds — fixpoint + margin
+    // re-windows (driver convergence loop, plan truncated per round by
+    // Materialize.fixpoint); the oracle unrolls 18 rounds — fixpoint + margin
     // at sf0.01, and extra rounds past convergence are identities.
     //
     // Scale: ONE full-edge exchange total (the initial degree

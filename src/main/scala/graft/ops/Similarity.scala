@@ -106,9 +106,10 @@ object Similarity extends QueryModule {
     *             the K arrays and re-normalize (the mean's direction is
     *             the sum's direction, so summing suffices).
     * Cells that lose every member keep their previous centroid (left
-    * join fallback) so K never shrinks. Plans are truncated per round
-    * (`stageIterative`); the round count is fixed, so no per-round
-    * convergence action runs. Double-sum partials
+    * join fallback) so K never shrinks. Each round goes through
+    * `Materialize.advance`: its plan is cut, its K rows are cached by
+    * one count, and the round it replaces is released; the round count
+    * is fixed, so no convergence test runs. Double-sum partials
     * make results run-stable only up to float association — this path
     * is validated by measured recall against brute force
     * (SimilaritySpec), not by the value-level DuckDB twin, which pins
@@ -121,7 +122,7 @@ object Similarity extends QueryModule {
       .limit(k)
       .select(col("vec_id").as("sid"), col("embedding").as("semb"),
         col("nrm").as("snrm"))
-    for (_ <- 0 until iters) {
+    for (i <- 0 until iters) {
       val aw = Window.partitionBy(col("vec_id"))
         .orderBy(col("c").desc, col("sid").asc)
       val assign = e.crossJoin(broadcast(cents))
@@ -141,13 +142,14 @@ object Similarity extends QueryModule {
           .as("semb"))
         .select(col("cell").as("sid"), col("semb"),
           expr("sqrt(vec_dot(semb, semb))").as("snrm"))
-      cents = Materialize.stageIterative(
+      cents = Materialize.advance(
+        Option.when(i > 0)(cents), // only a round this loop staged is released
         cents.select(col("sid"), col("semb").as("semb0"),
             col("snrm").as("snrm0"))
           .join(recentered, Seq("sid"), "left")
           .select(col("sid"),
             coalesce(col("semb"), col("semb0")).as("semb"),
-            coalesce(col("snrm"), col("snrm0")).as("snrm")))
+            coalesce(col("snrm"), col("snrm0")).as("snrm")))._1
     }
     cents
   }

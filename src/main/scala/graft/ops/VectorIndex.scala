@@ -93,15 +93,16 @@ object VectorIndex extends QueryModule {
     *             (m, c, pos) — one skinny shuffle with map-side
     *             combine — then rebuild the 16-float arrays.
     * Cells that lose every member keep their previous sub-vector, so
-    * no codebook entry ever vanishes; rounds are plan-truncated
-    * (`stageIterative`). Validated by measured ADC agreement
+    * no codebook entry ever vanishes; each round goes through
+    * `Materialize.advance` (plan cut, ≤64 rows cached by one count, the
+    * replaced round released). Validated by measured ADC agreement
     * (VectorIndexSpec), not the value-level oracle, which pins the
     * seed path — the same posture as the IVF k-means centroids.
     */
   private[graft] def kmeansSubCodebooks(vecs: DataFrame,
                                         iters: Int): DataFrame = {
     var books = pqCodebooks(vecs)
-    for (_ <- 0 until iters) {
+    for (i <- 0 until iters) {
       val assignRows = vecs.select(col("vec_id"), col("embedding"))
         .crossJoin(broadcast(books))
         .select(col("vec_id"), col("embedding"), col("m"), col("c"),
@@ -120,10 +121,11 @@ object VectorIndex extends QueryModule {
         .agg(expr(
           "transform(array_sort(collect_list(struct(pos, mx))), s -> cast(s.mx AS FLOAT))")
           .as("nsub"))
-      books = graft.Materialize.stageIterative(
+      books = Materialize.advance(
+        Option.when(i > 0)(books), // only a round this loop staged is released
         books.join(recentered, Seq("m", "c"), "left")
           .select(col("m"), col("c"),
-            coalesce(col("nsub"), col("sub")).as("sub")))
+            coalesce(col("nsub"), col("sub")).as("sub")))._1
     }
     books
   }

@@ -1,9 +1,12 @@
 package graft.streaming
 
-import graft.pipeline.EventsPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import graft.pipeline.{EventsPipeline, Layout, SnapshotStore}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 
 /** Open-session state for one user (flatMapGroupsWithState). */
 final case class SessionState(startUs: Long, lastUs: Long, n: Long)
@@ -142,6 +145,50 @@ object StreamingPipeline extends Serializable {
       .withWatermark("ts", watermark)
       .dropDuplicates("event_id")
 
+  /** The event-time harness every keyed monitor runs on: watermark `ts`,
+    * project `ts` itself (EventTimeTimeout needs the event-time tag on
+    * its input, and `unix_micros` strips it), its µs twin `ts_us`, the
+    * Long `key` and `cols`, group by the key, and apply `update` in
+    * Append mode with an event-time timeout. `update` returns its rows
+    * and when to wake next (epoch ms; None sets no timeout); the wake-up
+    * is clamped strictly above the current watermark, since Spark
+    * rejects a timeout at or below it (a fully-late key's deadline has
+    * already passed).
+    */
+  private def eventTimeState[S <: Product : TypeTag, O <: Product : TypeTag](
+      typed: DataFrame, watermark: String, key: Column, cols: Column*)(
+      update: (Long, Iterator[Row], GroupState[S]) => (Iterator[O], Option[Long]))
+      : Dataset[O] = {
+    implicit val stateEnc: Encoder[S] = Encoders.product[S]
+    implicit val outEnc: Encoder[O]   = Encoders.product[O]
+    typed
+      .withWatermark("ts", watermark)
+      .select(col("ts") +: unix_micros(col("ts")).as("ts_us") +:
+        key.as("key") +: cols: _*)
+      .groupByKey(_.getAs[Long]("key"))(Encoders.scalaLong)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (k: Long, rows: Iterator[Row], state: GroupState[S]) =>
+          val (out, wake) = update(k, rows, state)
+          wake.foreach(t => state.setTimeoutTimestamp(
+            math.max(t, state.getCurrentWatermarkMs() + 1)))
+          out
+      }
+  }
+
+  /** Finalize a watermark-bounded event buffer: the events at or below
+    * `state`'s current watermark in the (ts_us, event_id) total order the
+    * batch windows fold in, the events still open, and the wake-up
+    * (epoch ms) at which the watermark can pass the earliest open one.
+    */
+  private def finalizeOrder[E](open: Vector[E], state: GroupState[_])(
+      tsId: E => (Long, Long)): (Vector[E], Vector[E], Option[Long]) = {
+    val wmUs = state.getCurrentWatermarkMs() * 1000L
+    val (ready, still) = open.partition(tsId(_)._1 <= wmUs)
+    (ready.sortBy(tsId), still,
+      if (still.isEmpty) None else Some(still.map(tsId(_)._1).min / 1000L + 1L))
+  }
+
   /** Custom stateful sessionization over a stream
     * (`flatMapGroupsWithState`): per-user session aggregates — the
     * arbitrary-state API the built-in windowed aggregates can't express
@@ -159,23 +206,19 @@ object StreamingPipeline extends Serializable {
     * CLOSED session (StreamingSpec pins the parity).
     */
   def sessionized(
-      typed: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      typed: Dataset[Row],
       gapMinutes: Long = 30,
-      watermark: String = "1 hour"): org.apache.spark.sql.Dataset[SessionSummary] = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    implicit val stateEnc   = Encoders.product[SessionState]
-    implicit val outEnc     = Encoders.product[SessionSummary]
+      watermark: String = "1 hour"): Dataset[SessionSummary] = {
     val gapUs = gapMinutes * 60L * 1000000L
 
     def update(userId: Long, rows: Iterator[Row],
-        state: GroupState[SessionState]): Iterator[SessionSummary] = {
+        state: GroupState[SessionState]): (Iterator[SessionSummary], Option[Long]) = {
       if (state.hasTimedOut) {
         // watermark passed lastUs + gap with no successor event: the
         // open session can never be extended — flush it, drop the state
         val s = state.get
         state.remove()
-        Iterator.single(SessionSummary(userId, s.startUs, s.lastUs, s.n))
+        (Iterator.single(SessionSummary(userId, s.startUs, s.lastUs, s.n)), None)
       } else {
         var closed = List.empty[SessionSummary]
         var cur = state.getOption
@@ -193,27 +236,12 @@ object StreamingPipeline extends Serializable {
               cur = Some(SessionState(ts, ts, 1))
           }
         }
-        cur.foreach { s =>
-          state.update(s)
-          // timeout must sit strictly above the current watermark or
-          // Spark rejects it (a fully-late event's gap already passed)
-          state.setTimeoutTimestamp(math.max(
-            s.lastUs / 1000L + gapUs / 1000L,
-            state.getCurrentWatermarkMs() + 1))
-        }
-        closed.reverse.iterator
+        cur.foreach(state.update)
+        (closed.reverse.iterator, cur.map(s => s.lastUs / 1000L + gapUs / 1000L))
       }
     }
 
-    // accept the pipeline's typed schema (ts timestamp) directly; keep
-    // `ts` ITSELF alongside the µs projection — EventTimeTimeout needs
-    // the event-time tag on its input, and unix_micros strips it
-    typed
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"))
-      .groupByKey(r => r.getAs[Long]("user_id"))(Encoders.scalaLong)
-      .flatMapGroupsWithState[SessionState, SessionSummary](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
+    eventTimeState(typed, watermark, col("user_id"))(update)
   }
 
   /** Streaming drift monitor — the streaming deployment of the batch
@@ -244,11 +272,7 @@ object StreamingPipeline extends Serializable {
       binWidth: Double = 1.0,
       windowMinutes: Long = 60,
       threshold: Double = 0.2,
-      watermark: String = "1 hour"): org.apache.spark.sql.Dataset[DriftReport] = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    implicit val stateEnc = Encoders.product[DriftState]
-    implicit val outEnc   = Encoders.product[DriftReport]
+      watermark: String = "1 hour"): Dataset[DriftReport] = {
     val winUs = windowMinutes * 60L * 1000000L
     val nRef  = reference.values.sum
 
@@ -266,11 +290,11 @@ object StreamingPipeline extends Serializable {
     }
 
     def update(winStart: Long, rows: Iterator[Row],
-        state: GroupState[DriftState]): Iterator[DriftReport] = {
+        state: GroupState[DriftState]): (Iterator[DriftReport], Option[Long]) = {
       if (state.hasTimedOut) {
         val s = state.get
         state.remove()
-        Iterator.single(close(winStart, s.bins))
+        (Iterator.single(close(winStart, s.bins)), None)
       } else {
         var bins = state.getOption.map(_.bins).getOrElse(Map.empty[Long, Long])
         rows.foreach { r =>
@@ -278,24 +302,14 @@ object StreamingPipeline extends Serializable {
           bins = bins.updated(b, bins.getOrElse(b, 0L) + 1L)
         }
         state.update(DriftState(bins))
-        // close at window end, but never at-or-below the current
-        // watermark (Spark rejects a non-future timeout)
-        state.setTimeoutTimestamp(math.max(
-          (winStart + winUs) / 1000L,
-          state.getCurrentWatermarkMs() + 1))
-        Iterator.empty
+        // close at window end
+        (Iterator.empty, Some((winStart + winUs) / 1000L))
       }
     }
 
-    typed
-      .withWatermark("ts", watermark)
-      .select(col("ts"),
-        (unix_micros(col("ts")) - pmod(unix_micros(col("ts")), lit(winUs)))
-          .as("win_start"),
-        floor(col("value") / lit(binWidth)).cast("long").as("bin"))
-      .groupByKey(r => r.getAs[Long]("win_start"))(Encoders.scalaLong)
-      .flatMapGroupsWithState[DriftState, DriftReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
+    eventTimeState(typed, watermark,
+      unix_micros(col("ts")) - pmod(unix_micros(col("ts")), lit(winUs)),
+      floor(col("value") / lit(binWidth)).cast("long").as("bin"))(update)
   }
 
   /** Streaming CUSUM monitor — the streaming deployment of the batch
@@ -318,72 +332,42 @@ object StreamingPipeline extends Serializable {
   def cusumMonitor(
       typed: DataFrame,
       threshold: Long = 100000L,
-      watermark: String = "1 hour"): org.apache.spark.sql.Dataset[CusumAlert] = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    implicit val stateEnc = Encoders.product[CusumState]
-    implicit val outEnc   = Encoders.product[CusumAlert]
-
+      watermark: String = "1 hour"): Dataset[CusumAlert] = {
     val empty = CusumState(Vector.empty, baselineSet = false, 0L, 0L, 0L, 0L,
       alerted = false)
 
-    // fold every buffered event at-or-before the watermark, in the
-    // (ts_us, event_id) total order — the batch window's order
-    def drain(userId: Long, s: CusumState, wmUs: Long)
-        : (CusumState, Option[CusumAlert]) = {
-      val (ready, still) = s.open.partition(_._1 <= wmUs)
-      if (ready.isEmpty) (s, None)
-      else {
-        var (bSet, b)  = (s.baselineSet, s.baseline)
-        var (sum, mn)  = (s.sSum, s.sMin)
-        var mx         = s.statMax
-        var alerted    = s.alerted
-        var alert: Option[CusumAlert] = None
-        ready.sortBy(e => (e._1, e._2)).foreach { case (ts, _, cents) =>
-          if (!bSet) { bSet = true; b = cents }
-          sum += cents - b
-          if (sum < mn) mn = sum
-          val stat = sum - mn
-          if (stat > mx) mx = stat
-          if (!alerted && stat > threshold) {
-            alerted = true
-            alert = Some(CusumAlert(userId, ts, stat))
-          }
-        }
-        (CusumState(still, bSet, b, sum, mn, mx, alerted), alert)
-      }
-    }
-
     def update(userId: Long, rows: Iterator[Row],
-        state: GroupState[CusumState]): Iterator[CusumAlert] = {
-      val wmUs = state.getCurrentWatermarkMs() * 1000L
-      val withNew =
-        if (state.hasTimedOut) state.getOption.getOrElse(empty)
-        else {
-          val s = state.getOption.getOrElse(empty)
-          s.copy(open = s.open ++ rows.map(r => (
-            r.getAs[Long]("ts_us"), r.getAs[Long]("event_id"),
-            r.getAs[Long]("cents"))))
+        state: GroupState[CusumState]): (Iterator[CusumAlert], Option[Long]) = {
+      val s = state.getOption.getOrElse(empty)
+      val open =
+        if (state.hasTimedOut) s.open
+        else s.open ++ rows.map(r => (
+          r.getAs[Long]("ts_us"), r.getAs[Long]("event_id"),
+          r.getAs[Long]("cents")))
+      // fold every buffered event at-or-before the watermark
+      val (ready, still, wake) = finalizeOrder(open, state)(e => (e._1, e._2))
+      var (bSet, b)  = (s.baselineSet, s.baseline)
+      var (sum, mn)  = (s.sSum, s.sMin)
+      var mx         = s.statMax
+      var alerted    = s.alerted
+      var alert: Option[CusumAlert] = None
+      ready.foreach { case (ts, _, cents) =>
+        if (!bSet) { bSet = true; b = cents }
+        sum += cents - b
+        if (sum < mn) mn = sum
+        val stat = sum - mn
+        if (stat > mx) mx = stat
+        if (!alerted && stat > threshold) {
+          alerted = true
+          alert = Some(CusumAlert(userId, ts, stat))
         }
-      val (next, alert) = drain(userId, withNew, wmUs)
-      state.update(next)
-      if (next.open.nonEmpty)
-        // wake when the watermark can finalize the earliest open event
-        state.setTimeoutTimestamp(math.max(
-          next.open.map(_._1).min / 1000L + 1L, wmUs / 1000L + 1L))
-      alert.iterator
+      }
+      state.update(CusumState(still, bSet, b, sum, mn, mx, alerted))
+      (alert.iterator, wake)
     }
 
-    typed
-      .withWatermark("ts", watermark)
-      // ts itself must survive to the stateful operator (the analyzer
-      // requires the watermarked column there), alongside its µs twin
-      .select(col("ts"), col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("ts_us"),
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
-      .groupByKey(r => r.getAs[Long]("user_id"))(Encoders.scalaLong)
-      .flatMapGroupsWithState[CusumState, CusumAlert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
+    eventTimeState(typed, watermark, col("user_id"), col("event_id"),
+      expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))(update)
   }
 
   /** Streaming Holt forecaster — the streaming deployment of the batch
@@ -403,11 +387,7 @@ object StreamingPipeline extends Serializable {
     * (batch drops them too — no actual to score).
     */
   def holtForecaster(typed: DataFrame, watermark: String = "1 hour")
-      : org.apache.spark.sql.Dataset[HoltForecast] = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    implicit val stateEnc = Encoders.product[HoltState]
-    implicit val outEnc   = Encoders.product[HoltForecast]
+      : Dataset[HoltForecast] = {
     val empty = HoltState(Vector.empty, Vector.empty, done = false)
 
     def fit(userId: Long, f: Vector[(Long, Long, Long)]): HoltForecast = {
@@ -426,8 +406,7 @@ object StreamingPipeline extends Serializable {
     }
 
     def update(userId: Long, rows: Iterator[Row],
-        state: GroupState[HoltState]): Iterator[HoltForecast] = {
-      val wmUs = state.getCurrentWatermarkMs() * 1000L
+        state: GroupState[HoltState]): (Iterator[HoltForecast], Option[Long]) = {
       val withNew =
         if (state.hasTimedOut) state.getOption.getOrElse(empty)
         else {
@@ -437,9 +416,11 @@ object StreamingPipeline extends Serializable {
             r.getAs[Long]("ts_us"), r.getAs[Long]("event_id"),
             r.getAs[Long]("x"))))
         }
-      val (ready, still) = withNew.open.partition(_._1 <= wmUs)
-      val finals = (withNew.finals ++ ready)
-        .sortBy(e => (e._1, e._2)).take(9)
+      // the finalized head sits at or below every later watermark, so it
+      // re-sorts with the newly final events
+      val (ready, still, wake) =
+        finalizeOrder(withNew.finals ++ withNew.open, state)(e => (e._1, e._2))
+      val finals = ready.take(9)
       val (emit, done) =
         if (!withNew.done && finals.length == 9)
           (Some(fit(userId, finals)), true)
@@ -448,20 +429,11 @@ object StreamingPipeline extends Serializable {
       state.update(
         if (done) HoltState(Vector.empty, Vector.empty, done = true)
         else HoltState(still, finals, done = false))
-      if (!done && still.nonEmpty)
-        state.setTimeoutTimestamp(math.max(
-          still.map(_._1).min / 1000L + 1L, wmUs / 1000L + 1L))
-      emit.iterator
+      (emit.iterator, if (done) None else wake)
     }
 
-    typed
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("ts_us"),
-        expr("CAST(floor(value * 100) AS BIGINT)").as("x"))
-      .groupByKey(r => r.getAs[Long]("user_id"))(Encoders.scalaLong)
-      .flatMapGroupsWithState[HoltState, HoltForecast](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
+    eventTimeState(typed, watermark, col("user_id"), col("event_id"),
+      expr("CAST(floor(value * 100) AS BIGINT)").as("x"))(update)
   }
 
   /** Streaming last-touch attribution — the streaming deployment of the
@@ -478,63 +450,38 @@ object StreamingPipeline extends Serializable {
   def attributionMonitor(
       typed: DataFrame,
       windowUs: Long = 21600000000L,
-      watermark: String = "1 hour"): org.apache.spark.sql.Dataset[AttribCredit] = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    implicit val stateEnc = Encoders.product[AttribState]
-    implicit val outEnc   = Encoders.product[AttribCredit]
-
+      watermark: String = "1 hour"): Dataset[AttribCredit] = {
     val touches = Set("click", "view", "signup")
     val empty = AttribState(Vector.empty, "", 0L, hasTouch = false)
 
-    def drain(userId: Long, s: AttribState, wmUs: Long)
-        : (AttribState, Seq[AttribCredit]) = {
-      val (ready, still) = s.open.partition(_._1 <= wmUs)
-      if (ready.isEmpty) (s, Nil)
-      else {
-        var (tType, tUs, has) = (s.tType, s.tUs, s.hasTouch)
-        val out = Seq.newBuilder[AttribCredit]
-        ready.sortBy(e => (e._1, e._2)).foreach { case (ts, id, et, cents) =>
-          if (touches(et)) { tType = et; tUs = ts; has = true }
-          else if (et == "purchase") {
-            val channel =
-              if (!has) "none"
-              else if (ts - tUs > windowUs) "stale"
-              else tType
-            out += AttribCredit(userId, id, ts, channel, cents)
-          }
-        }
-        (AttribState(still, tType, tUs, has), out.result())
-      }
-    }
-
     def update(userId: Long, rows: Iterator[Row],
-        state: GroupState[AttribState]): Iterator[AttribCredit] = {
-      val wmUs = state.getCurrentWatermarkMs() * 1000L
-      val withNew =
-        if (state.hasTimedOut) state.getOption.getOrElse(empty)
-        else {
-          val s = state.getOption.getOrElse(empty)
-          s.copy(open = s.open ++ rows.map(r => (
-            r.getAs[Long]("ts_us"), r.getAs[Long]("event_id"),
-            r.getAs[String]("event_type"), r.getAs[Long]("cents"))))
+        state: GroupState[AttribState]): (Iterator[AttribCredit], Option[Long]) = {
+      val s = state.getOption.getOrElse(empty)
+      val open =
+        if (state.hasTimedOut) s.open
+        else s.open ++ rows.map(r => (
+          r.getAs[Long]("ts_us"), r.getAs[Long]("event_id"),
+          r.getAs[String]("event_type"), r.getAs[Long]("cents")))
+      val (ready, still, wake) = finalizeOrder(open, state)(e => (e._1, e._2))
+      var (tType, tUs, has) = (s.tType, s.tUs, s.hasTouch)
+      val out = Seq.newBuilder[AttribCredit]
+      ready.foreach { case (ts, id, et, cents) =>
+        if (touches(et)) { tType = et; tUs = ts; has = true }
+        else if (et == "purchase") {
+          val channel =
+            if (!has) "none"
+            else if (ts - tUs > windowUs) "stale"
+            else tType
+          out += AttribCredit(userId, id, ts, channel, cents)
         }
-      val (next, credits) = drain(userId, withNew, wmUs)
-      state.update(next)
-      if (next.open.nonEmpty)
-        state.setTimeoutTimestamp(math.max(
-          next.open.map(_._1).min / 1000L + 1L, wmUs / 1000L + 1L))
-      credits.iterator
+      }
+      state.update(AttribState(still, tType, tUs, has))
+      (out.result().iterator, wake)
     }
 
-    typed
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("ts_us"),
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
-      .groupByKey(r => r.getAs[Long]("user_id"))(Encoders.scalaLong)
-      .flatMapGroupsWithState[AttribState, AttribCredit](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
+    eventTimeState(typed, watermark, col("user_id"), col("event_id"),
+      col("event_type"),
+      expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))(update)
   }
 
   /** Streaming time-series gap fill — the streaming deployment of the
@@ -560,14 +507,9 @@ object StreamingPipeline extends Serializable {
   def gapFilled(
       typed: DataFrame,
       bucketUs: Long = 3600L * 1000000L,
-      watermark: String = "1 hour"): org.apache.spark.sql.Dataset[GapFillRow] = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    implicit val stateEnc = Encoders.product[GapFillState]
-    implicit val outEnc   = Encoders.product[GapFillRow]
-
+      watermark: String = "1 hour"): Dataset[GapFillRow] = {
     def update(userId: Long, rows: Iterator[Row],
-        state: GroupState[GapFillState]): Iterator[GapFillRow] = {
+        state: GroupState[GapFillState]): (Iterator[GapFillRow], Option[Long]) = {
       var s = state.getOption.getOrElse(
         GapFillState(Map.empty, Long.MinValue, 0.0))
       if (!state.hasTimedOut) rows.foreach { r =>
@@ -600,22 +542,31 @@ object StreamingPipeline extends Serializable {
         s = GapFillState(s.open - b, b, v)
       }
       state.update(s)
-      if (s.open.nonEmpty)
-        // wake when the earliest open bucket's end passes the watermark
-        // (never at-or-below the current watermark — Spark rejects it)
-        state.setTimeoutTimestamp(math.max(
-          (s.open.keys.min + 1) * bucketUs / 1000L,
-          state.getCurrentWatermarkMs() + 1))
-      out.result().iterator
+      // wake when the earliest open bucket's end passes the watermark
+      (out.result().iterator,
+        if (s.open.isEmpty) None else Some((s.open.keys.min + 1) * bucketUs / 1000L))
     }
 
-    typed
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("value"))
-      .groupByKey(r => r.getAs[Long]("user_id"))(Encoders.scalaLong)
-      .flatMapGroupsWithState[GapFillState, GapFillRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
+    eventTimeState(typed, watermark, col("user_id"), col("event_id"),
+      col("value"))(update)
+  }
+
+  /** The one canon/retro-link state transition both near-dup variants
+    * share (bounded and unbounded MUST not drift — the retro-link
+    * subtlety lives here exactly once): fold the batch's ids into the
+    * stored band canon, link every id to the post-batch canon, and when
+    * a later arrival DEMOTES the stored canon (ids need not arrive
+    * ascending) also emit a retro link (oldCanon -> newCanon) so the
+    * earlier doc's link set reflects the new canonical; without it BOTH
+    * docs would look canonical and the pair would be silently missed.
+    */
+  private def canonLinks(ids: Array[Long], state: GroupState[BandCanon])
+      : Iterator[BandLink] = {
+    val prev = state.getOption.map(_.canonDoc)
+    val canon = (prev ++ ids).min
+    state.update(BandCanon(canon))
+    val retro = prev.filter(_ > canon).map(p => BandLink(p, canon))
+    ids.iterator.map(id => BandLink(id, canon)) ++ retro.iterator
   }
 
   /** Streaming NEAR-dup detection (the streaming sibling of
@@ -641,28 +592,7 @@ object StreamingPipeline extends Serializable {
     * deployment is `nearDupLinksBounded`, whose state is
     * O(band signatures inside the watermark horizon).
     */
-  /** The one canon/retro-link state transition both near-dup variants
-    * share (bounded and unbounded MUST not drift — the retro-link
-    * subtlety lives here exactly once): fold the batch's ids into the
-    * stored band canon, link every id to the post-batch canon, and when
-    * a later arrival DEMOTES the stored canon (ids need not arrive
-    * ascending) also emit a retro link (oldCanon -> newCanon) so the
-    * earlier doc's link set reflects the new canonical; without it BOTH
-    * docs would look canonical and the pair would be silently missed.
-    */
-  private def canonLinks(ids: Array[Long],
-      state: org.apache.spark.sql.streaming.GroupState[BandCanon])
-      : Iterator[BandLink] = {
-    val prev = state.getOption.map(_.canonDoc)
-    val canon = (prev ++ ids).min
-    state.update(BandCanon(canon))
-    val retro = prev.filter(_ > canon).map(p => BandLink(p, canon))
-    ids.iterator.map(id => BandLink(id, canon)) ++ retro.iterator
-  }
-
-  def nearDupLinks(docs: DataFrame): org.apache.spark.sql.Dataset[BandLink] = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  def nearDupLinks(docs: DataFrame): Dataset[BandLink] = {
     implicit val stateEnc = Encoders.product[BandCanon]
     implicit val outEnc   = Encoders.product[BandLink]
 
@@ -688,11 +618,14 @@ object StreamingPipeline extends Serializable {
     * deliberate trade (dedup-within-horizon) every watermarked streaming
     * dedup makes; corpus-wide transitivity belongs to the batch
     * `dedup_minhash` + connected-components pass over the sink.
+    *
+    * It does not run on `eventTimeState`: its watermark is set on the
+    * document stream BEFORE `bandSignatures` drops one-token docs and
+    * explodes the rest into bands (so every arrival advances it), and
+    * its key is the String band key.
     */
   def nearDupLinksBounded(docs: DataFrame, horizonMinutes: Long)
-      : org.apache.spark.sql.Dataset[BandLink] = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+      : Dataset[BandLink] = {
     implicit val stateEnc = Encoders.product[BandCanon]
     implicit val outEnc   = Encoders.product[BandLink]
     val horizonMs = horizonMinutes * 60L * 1000L
@@ -757,8 +690,8 @@ object StreamingPipeline extends Serializable {
     * what lets the state store evict rows once the other side's
     * watermark passes their match window — state is O(watermark
     * horizon × arrival rate) per side, never O(stream length).
-    */
-  /** `joinType` extends the same state machine to `left_outer`: a click
+    *
+    * `joinType` extends the same state machine to `left_outer`: a click
     * whose match window closes with no view EMITS ONCE with null view
     * columns — the "unattributed click" record a funnel needs, produced
     * exactly when the view-side watermark proves no match can still
@@ -833,6 +766,21 @@ object StreamingPipeline extends Serializable {
       .withColumn("chunk_key",
         col("doc_id") * lit(1000000L) + col("chunk_id"))
 
+  /** The micro-batch harness every foreachBatch maintainer runs on:
+    * drain what `stream` holds now (AvailableNow), checkpointed at
+    * `checkpointDir`, calling `body(session, batch, batchId)` once per
+    * micro-batch. Delivery is at-least-once; each maintainer makes its
+    * commit idempotent on `batchId`.
+    */
+  private def eachBatch(stream: DataFrame, checkpointDir: String)(
+      body: (SparkSession, DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch((batch: DataFrame, batchId: Long) =>
+        body(batch.sparkSession, batch, batchId))
+      .start()
+
   /** Continuous upsert into a `SnapshotStore` table: each micro-batch
     * merges on `key` (highest `seqCol` wins within a batch), committed
     * as snapshot version = batchId. foreachBatch delivery is
@@ -853,15 +801,10 @@ object StreamingPipeline extends Serializable {
       snapshotDir: String,
       checkpointDir: String,
       opCol: Option[String] = None): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.pipeline.SnapshotStore.upsertVersion(
-          batch.sparkSession, batch, key, seqCol, snapshotDir, batchId,
-          opCol = opCol)
-      }
-      .start()
+    eachBatch(stream, checkpointDir) { (s, batch, batchId) =>
+      SnapshotStore.upsertVersion(s, batch, key, seqCol, snapshotDir, batchId,
+        opCol = opCol)
+    }
 
   /** Streaming SCD-2 dimension maintenance: each micro-batch of
     * attribute updates is merged into a persistent dimension HISTORY
@@ -890,26 +833,21 @@ object StreamingPipeline extends Serializable {
       attrs: Seq[String],
       snapshotDir: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val compacted = batch
-          .groupBy(col(key))
-          .agg(max(struct(attrs.map(col): _*)).as("_img"))
-          .select(col(key) +: attrs.map(a => col(s"_img.$a").as(a)): _*)
-        val cur = graft.pipeline.SnapshotStore.read(s, snapshotDir)
-          .map(_.drop("_vkey").filter(col("is_current")))
-          .getOrElse(graft.pipeline.Layout.scd2Init(compacted.limit(0), 0L))
-        val changes = graft.pipeline.Layout
-          .scd2Changes(cur, compacted, key, attrs, eff = batchId)
-          .withColumn("_vkey",
-            concat_ws(":", col(key), col("valid_from")))
-        graft.pipeline.SnapshotStore.upsertVersion(
-          s, changes, "_vkey", None, snapshotDir, batchId)
-      }
-      .start()
+    eachBatch(stream, checkpointDir) { (s, batch, batchId) =>
+      val compacted = batch
+        .groupBy(col(key))
+        .agg(max(struct(attrs.map(col): _*)).as("_img"))
+        .select(col(key) +: attrs.map(a => col(s"_img.$a").as(a)): _*)
+      val cur = SnapshotStore.read(s, snapshotDir)
+        .map(_.drop("_vkey").filter(col("is_current")))
+        .getOrElse(Layout.scd2Init(compacted.limit(0), 0L))
+      val changes = Layout
+        .scd2Changes(cur, compacted, key, attrs, eff = batchId)
+        .withColumn("_vkey",
+          concat_ws(":", col(key), col("valid_from")))
+      SnapshotStore.upsertVersion(
+        s, changes, "_vkey", None, snapshotDir, batchId)
+    }
 
   /** Continuous DEDUP-GATED ingest — the streaming deployment of
     * `dedup_incremental`'s band-index pattern, wired end-to-end: each
@@ -942,50 +880,45 @@ object StreamingPipeline extends Serializable {
       indexDir: String,
       acceptedDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist()
-        try graft.Materialize.scoped {
-          // bands are consumed by the probe, the peer check, and the
-          // index merge — stage once
-          val bands = graft.Materialize.stage(
-            graft.ops.Dedup.bandSignatures(b)
-              .withColumn("band_key",
-                concat_ws(":", col("band"), col("band_sig"))))
-          val stored = graft.pipeline.SnapshotStore.read(s, indexDir)
-          val corpusHit = stored.fold(bands.select(col("doc_id")).limit(0)) {
-            idx => bands.join(idx.select(col("band_key")), "band_key")
-              .select(col("doc_id"))
-          }
-          val peerHit = bands.join(
-              bands.groupBy(col("band_key")).agg(min(col("doc_id")).as("bmin")),
-              "band_key")
-            .filter(col("bmin") < col("doc_id"))
+    eachBatch(docs, checkpointDir) { (s, batch, batchId) =>
+      val b = batch.persist()
+      try graft.Materialize.scoped {
+        // bands are consumed by the probe, the peer check, and the
+        // index merge — stage once
+        val bands = graft.Materialize.stage(
+          graft.ops.Dedup.bandSignatures(b)
+            .withColumn("band_key",
+              concat_ws(":", col("band"), col("band_sig"))))
+        val stored = SnapshotStore.read(s, indexDir)
+        val corpusHit = stored.fold(bands.select(col("doc_id")).limit(0)) {
+          idx => bands.join(idx.select(col("band_key")), "band_key")
             .select(col("doc_id"))
-          val rejected = corpusHit.union(peerHit).distinct()
-          val accepted = b.join(rejected, Seq("doc_id"), "left_anti")
-          graft.pipeline.SnapshotStore.upsertVersion(
-            s, accepted, "doc_id", None, acceptedDir, batchId)
-          val newIdx = bands
-            .join(rejected, Seq("doc_id"), "left_anti")
-            .groupBy(col("band"), col("band_sig"), col("band_key"))
-            .agg(min(col("doc_id")).as("canon_doc"))
-          val merged = stored.fold(newIdx) { idx =>
-            newIdx.join(
-                idx.select(col("band_key"), col("canon_doc").as("old_canon")),
-                Seq("band_key"), "left")
-              .select(col("band"), col("band_sig"), col("band_key"),
-                least(col("canon_doc"),
-                  coalesce(col("old_canon"), col("canon_doc"))).as("canon_doc"))
-          }
-          graft.pipeline.SnapshotStore.upsertVersion(
-            s, merged, "band_key", None, indexDir, batchId)
-        } finally b.unpersist()
-      }
-      .start()
+        }
+        val peerHit = bands.join(
+            bands.groupBy(col("band_key")).agg(min(col("doc_id")).as("bmin")),
+            "band_key")
+          .filter(col("bmin") < col("doc_id"))
+          .select(col("doc_id"))
+        val rejected = corpusHit.union(peerHit).distinct()
+        val accepted = b.join(rejected, Seq("doc_id"), "left_anti")
+        SnapshotStore.upsertVersion(
+          s, accepted, "doc_id", None, acceptedDir, batchId)
+        val newIdx = bands
+          .join(rejected, Seq("doc_id"), "left_anti")
+          .groupBy(col("band"), col("band_sig"), col("band_key"))
+          .agg(min(col("doc_id")).as("canon_doc"))
+        val merged = stored.fold(newIdx) { idx =>
+          newIdx.join(
+              idx.select(col("band_key"), col("canon_doc").as("old_canon")),
+              Seq("band_key"), "left")
+            .select(col("band"), col("band_sig"), col("band_key"),
+              least(col("canon_doc"),
+                coalesce(col("old_canon"), col("canon_doc"))).as("canon_doc"))
+        }
+        SnapshotStore.upsertVersion(
+          s, merged, "band_key", None, indexDir, batchId)
+      } finally b.unpersist()
+    }
 
   /** Continuous CDC upsert that ALSO maintains a grouped aggregate
     * view incrementally — the live materialized-view loop: each batch
@@ -1009,21 +942,16 @@ object StreamingPipeline extends Serializable {
       key: String,
       seqCol: Option[String],
       groupCol: String,
-      sums: Seq[(String, org.apache.spark.sql.Column)],
+      sums: Seq[(String, Column)],
       snapshotDir: String,
       viewDir: String,
       checkpointDir: String,
       opCol: Option[String] = None): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.pipeline.SnapshotStore.upsertVersion(
-          batch.sparkSession, batch, key, seqCol, snapshotDir, batchId,
-          opCol = opCol)
-        foldView(batch.sparkSession, snapshotDir, viewDir, groupCol, sums)
-      }
-      .start()
+    eachBatch(stream, checkpointDir) { (s, batch, batchId) =>
+      SnapshotStore.upsertVersion(s, batch, key, seqCol, snapshotDir, batchId,
+        opCol = opCol)
+      foldView(s, snapshotDir, viewDir, groupCol, sums)
+    }
 
   /** Bring the view store up to the table store's head (idempotent;
     * factored out of `runIncrementalView` so crash/replay windows are
@@ -1038,8 +966,7 @@ object StreamingPipeline extends Serializable {
       snapshotDir: String,
       viewDir: String,
       groupCol: String,
-      sums: Seq[(String, org.apache.spark.sql.Column)]): Unit = {
-    import graft.pipeline.SnapshotStore
+      sums: Seq[(String, Column)]): Unit = {
     val tableV = SnapshotStore.latestVersion(spark, snapshotDir).getOrElse(
       return) // nothing committed yet: nothing to fold
     // the view commits under txn = the TABLE version it reflects; a
@@ -1145,18 +1072,12 @@ object StreamingPipeline extends Serializable {
       checkpointDir: String,
       carryCols: Seq[String] = Nil,
       evolve: Boolean = false): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val vecs = batch.select(col("vec_id") +: col("embedding") +:
-          expr("sqrt(vec_dot(embedding, embedding))").as("nrm") +:
-          carryCols.map(col): _*)
-        graft.ops.VectorIndex.ingestVersion(s, vecs, indexDir,
-          batchId + 1, evolve)
-      }
-      .start()
+    eachBatch(stream, checkpointDir) { (s, batch, batchId) =>
+      val vecs = batch.select(col("vec_id") +: col("embedding") +:
+        expr("sqrt(vec_dot(embedding, embedding))").as("nrm") +:
+        carryCols.map(col): _*)
+      graft.ops.VectorIndex.ingestVersion(s, vecs, indexDir, batchId + 1, evolve)
+    }
 
   /** Streaming maintenance of a persistent inverted index
     * (`ops.SearchIndex`): each micro-batch of `(doc_id, text[, op])`
@@ -1173,14 +1094,9 @@ object StreamingPipeline extends Serializable {
       indexDir: String,
       checkpointDir: String,
       opCol: Option[String] = None): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.SearchIndex.commitVersion(
-          batch.sparkSession, batch, indexDir, batchId + 1, opCol)
-      }
-      .start()
+    eachBatch(stream, checkpointDir) { (s, batch, batchId) =>
+      graft.ops.SearchIndex.commitVersion(s, batch, indexDir, batchId + 1, opCol)
+    }
 
   /** Streaming maintenance of the persistent KMV sketch store
     * (`ops.SketchStore`): each micro-batch of (grp, key) rows folds
@@ -1195,14 +1111,9 @@ object StreamingPipeline extends Serializable {
       stream: DataFrame,
       storeDir: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.SketchStore.ingest(
-          batch.sparkSession, batch.toDF(), storeDir, batchId + 1)
-      }
-      .start()
+    eachBatch(stream, checkpointDir) { (s, batch, batchId) =>
+      graft.ops.SketchStore.ingest(s, batch, storeDir, batchId + 1)
+    }
 
   /** Continuous exact-substring SPAN SCRUB — the streaming deployment of
     * `dedup_span_scrub` (Lee et al.'s ExactSubstr pass): each micro-batch
@@ -1263,55 +1174,50 @@ object StreamingPipeline extends Serializable {
       cleanedDir: String,
       checkpointDir: String,
       w: Int = 10): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val genDir = scrubIndexGen(s, indexDir)
-        val b = batch.persist()
-        try graft.Materialize.scoped {
-          // windows feed the batch-first aggregate, the mark join, and
-          // the index merge — stage once
-          val wins = graft.Materialize.stage(
-            graft.ops.Dedup.spanWindows(b.toDF(), w))
-          val bFirst = graft.Materialize.stage(wins.groupBy(col("hsh"))
-            .agg(min(struct(col("doc_id"), col("pos"))).as("bf")))
-          val stored = graft.pipeline.SnapshotStore.read(s, genDir)
-          val seen = stored.fold(
-            wins.select(col("hsh")).limit(0).withColumn("seen", lit(true)))(
-            idx => idx.select(col("hsh"), lit(true).as("seen")))
-          val marked = wins.join(bFirst, "hsh")
-            .join(seen, Seq("hsh"), "left")
-            .filter(col("seen").isNotNull ||
-              struct(col("doc_id"), col("pos")) =!= col("bf"))
-            .select(col("doc_id"), col("pos"))
-          val cleaned = graft.ops.Dedup.spanRebuild(
-            b.toDF().select(col("doc_id"), col("text")),
-            graft.ops.Dedup.spanCoverage(marked, w))
-          graft.pipeline.SnapshotStore.upsertVersion(
-            s, cleaned, "doc_id", None, cleanedDir, batchId)
-          // min-merge: a batch's first occurrence enters the index only
-          // where it precedes (or introduces) the stored canon — never
-          // last-write-wins, same argument as the band index's min-canon
-          val newIdx = bFirst.select(col("hsh"),
-            col("bf.doc_id").as("first_doc"), col("bf.pos").as("first_pos"))
-          val merged = stored.fold(newIdx) { idx =>
-            newIdx.join(idx.select(col("hsh"),
-                struct(col("first_doc"), col("first_pos")).as("old")),
-              Seq("hsh"), "left")
-              .select(col("hsh"),
-                least(col("old"),
-                  struct(col("first_doc"), col("first_pos"))).as("m"))
-              .select(col("hsh"), col("m.first_doc").as("first_doc"),
-                col("m.first_pos").as("first_pos"))
-          }
-          graft.pipeline.SnapshotStore.upsertVersion(
-            s, merged, "hsh", None, genDir, batchId)
-          maybeRollScrubIndex(s, indexDir, genDir)
-        } finally b.unpersist()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (s, batch, batchId) =>
+      val genDir = scrubIndexGen(s, indexDir)
+      val b = batch.persist()
+      try graft.Materialize.scoped {
+        // windows feed the batch-first aggregate, the mark join, and
+        // the index merge — stage once
+        val wins = graft.Materialize.stage(
+          graft.ops.Dedup.spanWindows(b, w))
+        val bFirst = graft.Materialize.stage(wins.groupBy(col("hsh"))
+          .agg(min(struct(col("doc_id"), col("pos"))).as("bf")))
+        val stored = SnapshotStore.read(s, genDir)
+        val seen = stored.fold(
+          wins.select(col("hsh")).limit(0).withColumn("seen", lit(true)))(
+          idx => idx.select(col("hsh"), lit(true).as("seen")))
+        val marked = wins.join(bFirst, "hsh")
+          .join(seen, Seq("hsh"), "left")
+          .filter(col("seen").isNotNull ||
+            struct(col("doc_id"), col("pos")) =!= col("bf"))
+          .select(col("doc_id"), col("pos"))
+        val cleaned = graft.ops.Dedup.spanRebuild(
+          b.select(col("doc_id"), col("text")),
+          graft.ops.Dedup.spanCoverage(marked, w))
+        SnapshotStore.upsertVersion(
+          s, cleaned, "doc_id", None, cleanedDir, batchId)
+        // min-merge: a batch's first occurrence enters the index only
+        // where it precedes (or introduces) the stored canon — never
+        // last-write-wins, same argument as the band index's min-canon
+        val newIdx = bFirst.select(col("hsh"),
+          col("bf.doc_id").as("first_doc"), col("bf.pos").as("first_pos"))
+        val merged = stored.fold(newIdx) { idx =>
+          newIdx.join(idx.select(col("hsh"),
+              struct(col("first_doc"), col("first_pos")).as("old")),
+            Seq("hsh"), "left")
+            .select(col("hsh"),
+              least(col("old"),
+                struct(col("first_doc"), col("first_pos"))).as("m"))
+            .select(col("hsh"), col("m.first_doc").as("first_doc"),
+              col("m.first_pos").as("first_pos"))
+        }
+        SnapshotStore.upsertVersion(
+          s, merged, "hsh", None, genDir, batchId)
+        maybeRollScrubIndex(s, indexDir, genDir)
+      } finally b.unpersist()
+    }
 
   /** The live generation of a rolled scrub index: generation 0 is `dir`
     * itself, generation K is `dir-gK`, and the live one is the highest
@@ -1323,7 +1229,7 @@ object StreamingPipeline extends Serializable {
     @annotation.tailrec
     def walk(k: Int, live: String): String = {
       val cand = s"$dir-g$k"
-      if (graft.pipeline.SnapshotStore.latestVersion(spark, cand).isDefined)
+      if (SnapshotStore.latestVersion(spark, cand).isDefined)
         walk(k + 1, cand)
       else live
     }
@@ -1345,7 +1251,7 @@ object StreamingPipeline extends Serializable {
   private def maybeRollScrubIndex(s: SparkSession, base: String,
                                   genDir: String): Unit = {
     val maxBucketBytes = graft.Knobs.streamScrubMaxBucketBytes.get(s)
-    graft.pipeline.SnapshotStore.manifest(s, genDir).foreach { m =>
+    SnapshotStore.manifest(s, genDir).foreach { m =>
       val fs = new org.apache.hadoop.fs.Path(genDir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       val bytes = m.buckets.toSeq.map { case (bId, dn) =>
@@ -1357,7 +1263,7 @@ object StreamingPipeline extends Serializable {
         val curGen =
           if (genDir == base) 0
           else genDir.stripPrefix(s"$base-g").toInt
-        graft.pipeline.SnapshotStore.rebucket(
+        SnapshotStore.rebucket(
           s, genDir, s"$base-g${curGen + 1}", "hsh", m.numBuckets * 2)
       }
     }

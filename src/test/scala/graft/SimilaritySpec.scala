@@ -253,6 +253,19 @@ class SimilaritySpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.ann.ivfKmeansIters")
   }
 
+  test("k-means centroid rounds are released: cache does not grow with rounds") {
+    // cached entries left inside the scope after the refinement returns:
+    // the same after 5 rounds as after 1, so every superseded round's
+    // centroid frame was freed
+    val e = ops.Similarity.normed(spark, dir)
+    def cachedAfter(iters: Int): Int = Materialize.scoped {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      ops.Similarity.kmeansCentroids(e, 4, iters)
+      spark.sparkContext.getPersistentRDDs.size - before
+    }
+    assert(cachedAfter(1) === cachedAfter(5))
+  }
+
   test("sim_ann_ivf cell cap bounds candidate volume on a skewed corpus") {
     // one dominant cluster: 40 vectors all within noise of axis 0, so
     // (near-)all of them collapse into the same IVF cell — the skew that

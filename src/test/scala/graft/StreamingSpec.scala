@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.streaming.StreamingPipeline
+import graft.streaming.{CusumAlert, StreamingPipeline}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -609,6 +610,44 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table("cusum").count() === 1L, "no re-alert after latch")
     } finally q.stop()
+  }
+
+  test("streaming CUSUM restores its buffered events across a restart and alerts once") {
+    val landing = scratchDir("cusum_landing")
+    val out = scratchDir("cusum_out") + "/alerts"
+    val ckpt = scratchDir("cusum_ckpt") + "/cp"
+    val h  = 3_600_000_000L
+    val t0 = 86400L * 1000000L
+    // one query run from the CSV landing dir into a parquet sink, resumed
+    // from the same checkpoint every time
+    def run(): Unit = {
+      val q = StreamingPipeline
+        .cusumMonitor(StreamingPipeline.readCsvStream(spark, landing),
+          threshold = 1000L)
+        .writeStream.format("parquet")
+        .option("checkpointLocation", ckpt)
+        .start(out)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def alerts(): Seq[(Long, Long, Long)] =
+      spark.read.schema(Encoders.product[CusumAlert].schema).parquet(out)
+        .select($"user_id", $"ts_us", $"stat").as[(Long, Long, Long)]
+        .collect().toSeq
+    // user 1: 1,1,1,5,5,5 → excursions (cents) 0,0,0,400,800,1200; the
+    // crossing is the SIXTH event, which the watermark (max ts − 1h)
+    // has not passed when the first run stops
+    writeCsv(landing, "b1.csv", Seq(
+      s"1,$t0,1,m,1.0", s"2,${t0 + h},1,m,1.0", s"3,${t0 + 2 * h},1,m,1.0",
+      s"4,${t0 + 3 * h},1,m,5.0", s"5,${t0 + 4 * h},1,m,5.0",
+      s"6,${t0 + 5 * h},1,m,5.0"))
+    run()
+    assert(alerts().isEmpty, "the crossing event is still buffered")
+    // restart: a later event moves the watermark past the crossing,
+    // which only the restored buffer and running sums can alert on
+    writeCsv(landing, "b2.csv", Seq(s"99,${t0 + 10 * h},9,m,1.0"))
+    run()
+    assert(alerts() === Seq((1L, t0 + 5 * h, 1200L)),
+      "exactly the one crossing alert")
   }
 
   test("streaming attribution credits like the batch window, " +

@@ -332,6 +332,19 @@ class VectorIndexSpec extends SparkSpec {
     assert(aKm >= aSeed - 1e-9, s"k-means degraded ADC: $aKm < $aSeed")
   }
 
+  test("PQ k-means codebook rounds are released: cache does not grow with rounds") {
+    // cached entries left inside the scope after the refinement returns:
+    // the same after 5 rounds as after 1, so every superseded round's
+    // codebook frame was freed
+    val e = normed(sfTiny)
+    def cachedAfter(iters: Int): Int = Materialize.scoped {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      VectorIndex.kmeansSubCodebooks(e, iters)
+      spark.sparkContext.getPersistentRDDs.size - before
+    }
+    assert(cachedAfter(1) === cachedAfter(5))
+  }
+
   test("ADC surfaces a planted near-duplicate (lossless small codebook)") {
     // crafted 8-vector geometry (SimilaritySpec's fixture recipe):
     // vector 1 is a near-dup of vector 0; with ≤16 corpus vectors every
