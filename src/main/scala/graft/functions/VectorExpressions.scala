@@ -148,6 +148,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new MisraGriesCandidates(children.head, children(1))
       }))
     ext.injectOptimizerRule(_ => LevenshteinLengthGuard)
+    ext.injectQueryPostPlannerStrategyRule(SmallScansInOnePartition)
     DialectShims.register(ext)
   }
 }

@@ -15,8 +15,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Deliberate improvements over the reference
   * (/root/reference/spark_tasks/weather_task.py):
-  *  - the watermark scalar never crosses to the driver: 1-row agg
-  *    broadcast-joined (reference collect()s it, :78);
+  *  - the watermark is a 1-row agg broadcast-joined into the same query
+  *    as the filter, not a value the program collect()s and splices back
+  *    (reference, :78). Spark's broadcast exchange still collects that
+  *    one row to the driver and ships it to the executors;
   *  - a watermark-lookup failure fails the run instead of silently
   *    re-ingesting everything (reference swallows, :86-89);
   *  - the plan executes ONCE: persisted before the count-guard + write
@@ -76,9 +78,10 @@ object EventsPipeline {
   }
 
   /** P2: keep only rows newer than the sink's high watermark. The scalar
-    * stays executor-side (broadcast 1-row agg); an empty/missing sink
-    * passes everything through. Delegates to the SinkIO seam so the same
-    * semantics run against parquet or JDBC sinks.
+    * is a 1-row agg broadcast-joined to the rows (its broadcast exchange
+    * collects the row to the driver, then ships it to the executors); an
+    * empty/missing sink passes everything through. Delegates to the
+    * SinkIO seam so the same semantics run against parquet or JDBC sinks.
     */
   def watermarkFilter(spark: SparkSession, df: DataFrame, sinkDir: String): DataFrame =
     SinkIO.watermarkFilter(spark, df, new ParquetSink(sinkDir), "ts")

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 /** The reader/writer seam the reference hard-wires to Postgres
   * (weather_task.py:72-99): one incremental-sink interface with a
@@ -15,8 +16,9 @@ import org.apache.spark.sql.functions._
 trait SinkIO {
 
   /** 1-row frame holding the sink's high watermark as column `wm`
-    * (null/empty sink → a single null row). Stays executor-side; the
-    * caller broadcast-joins it (SURVEY P2).
+    * (null/empty sink → a single null row). The caller broadcast-joins
+    * it (SURVEY P2): the broadcast exchange collects the row to the
+    * driver and ships it to the executors.
     */
   def watermark(spark: SparkSession, tsCol: String): DataFrame
 
@@ -36,11 +38,18 @@ final class ParquetSink(dir: String, partitionCol: Option[String] = None)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** The read states its one column's type, so nothing is inferred: a
+    * directory with no data file yet (created before the first append,
+    * or holding only `_SUCCESS`-style markers, which Spark's file index
+    * skips) reads as an empty scan and gives the null watermark instead
+    * of failing with UNABLE_TO_INFER_SCHEMA.
+    */
   override def watermark(spark: SparkSession, tsCol: String): DataFrame =
     if (!exists(spark))
       spark.range(1).select(lit(null).cast("timestamp").as("wm"))
     else
-      spark.read.parquet(dir).agg(max(col(tsCol)).as("wm"))
+      spark.read.schema(new StructType().add(tsCol, TimestampType)).parquet(dir)
+        .agg(max(col(tsCol)).as("wm"))
 
   override def append(df: DataFrame): Unit = {
     val w = df.write.mode(SaveMode.Append)
@@ -110,7 +119,8 @@ final class JdbcSink(url: String, table: String, driver: String)
 object SinkIO {
 
   /** P2 against any sink: keep rows strictly newer than the watermark;
-    * empty sink passes everything. The scalar never reaches the driver.
+    * empty sink passes everything. The 1-row watermark is broadcast:
+    * collected to the driver by the broadcast exchange, not by the caller.
     */
   def watermarkFilter(
       spark: SparkSession, df: DataFrame, sink: SinkIO, tsCol: String): DataFrame = {

@@ -66,6 +66,25 @@ class PipelineSpec extends SparkSpec {
     assert(out.select("event_date").distinct().count() === 3)
   }
 
+  test("a sink directory that exists but holds no data file is an empty sink") {
+    // created ahead of the first run: empty, with a commit marker, or with
+    // a file still being copied in (names Spark's file index skips)
+    Seq(None, Some("_SUCCESS"), Some("part-00000.parquet._COPYING_"))
+      .zipWithIndex.foreach { case (marker, i) =>
+        val landing = scratchDir(s"pipe_l_empty$i")
+        val sink    = scratchDir(s"pipe_s_empty$i") + "/sink"
+        val archive = scratchDir(s"pipe_a_empty$i")
+        Files.createDirectories(Paths.get(sink))
+        marker.foreach(m => Files.write(Paths.get(sink, m), Array.emptyByteArray))
+        writeCsv(landing, "batch1.csv", Seq(
+          "1,86400000000,10,click,1.0",
+          "2,172800000000,11,view,2.0"))
+        val r = EventsPipeline.run(spark, landing, sink, archive, "2026-08-12")
+        assert(r.rowsRead === 2 && r.rowsAppended === 2 && r.filesArchived === 1, marker)
+        assert(spark.read.parquet(sink).count() === 2, marker)
+      }
+  }
+
   test("PERMISSIVE drops corrupt rows; FAILFAST throws") {
     val landing = scratchDir("pipe_l2")
     val sink    = scratchDir("pipe_s2") + "/sink"

@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{col, count, sum}
 
 /** Physical-plan audits: the scale properties the engine claims are
   * asserted here, so a regression (lost pushdown, accidental cartesian,
@@ -311,5 +315,67 @@ class PlanAuditSpec extends SparkSpec {
       .queryExecution.sparkPlan.toString
     // equi-join on label: a hash or sort-merge join, never nested-loop
     assert(plan.contains("Join") && !plan.contains("NestedLoop"), plan)
+  }
+
+  // ─── SmallScansInOnePartition ───────────────────────────────────────
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** Final adaptive plan of `df` after running it. */
+  private def finalPlan(df: DataFrame): SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  private def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] =
+    Aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+
+  /** A small join plus aggregate: two file scans of the sfTiny tables. */
+  private def smallJoinAgg(): DataFrame = {
+    val o = Tables.orders(spark, sfTiny)
+    val li = Tables.lineitem(spark, sfTiny)
+    li.join(o, li("l_orderkey") === o("o_orderkey"))
+      .groupBy(col("o_orderstatus"))
+      .agg(sum(col("l_quantity")).as("q"), count("*").as("n"))
+  }
+
+  test("a plan whose file scans fit one file split runs with no shuffle") {
+    val plan = finalPlan(smallJoinAgg())
+    assert(shuffles(plan).isEmpty, plan)
+    assert(Aqe.collect(plan) { case c: CoalesceExec => c }.nonEmpty, plan)
+  }
+
+  test("a plan whose file scans exceed one file split keeps its shuffle") {
+    // with a 1-byte open cost the split is bytes / 4 cores, under the total
+    val key = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try {
+      val plan = finalPlan(smallJoinAgg())
+      assert(shuffles(plan).nonEmpty, plan)
+      assert(Aqe.collect(plan) { case c: CoalesceExec => c }.isEmpty, plan)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  test("an explicit repartition(n) under a small scan keeps its n partitions") {
+    val df = Tables.lineitem(spark, sfTiny).repartition(4, col("l_orderkey"))
+    assert(df.rdd.getNumPartitions === 4)
+    val plan = finalPlan(df)
+    assert(shuffles(plan).map(_.numPartitions) === Seq(4), plan)
+  }
+
+  test("a plan over a staged frame is left to the planner") {
+    Materialize.scoped {
+      val staged = Materialize.stage(
+        Tables.lineitem(spark, sfTiny).repartition(4, col("l_partkey")))
+      val plan = finalPlan(
+        staged.groupBy(col("l_orderkey")).agg(sum(col("l_quantity")).as("q")))
+      assert(Aqe.collect(plan) { case t: InMemoryTableScanExec => t }.nonEmpty, plan)
+      assert(Aqe.collect(plan) { case c: CoalesceExec => c }.isEmpty, plan)
+      assert(shuffles(plan).nonEmpty, plan)
+    }
   }
 }
