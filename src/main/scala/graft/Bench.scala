@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * plus process-wide `loadavg` samples at start/end. Reading the fields:
   * wall >> cpu/32 with low gc and unchanged shuffle bytes = external
   * load, not a plan regression; high gc = memory pressure; changed
-  * shuffle bytes = an actual plan change. The five variance-prone banded
+  * shuffle bytes = an actual plan change. The six variance-prone banded
   * self-join queries additionally run SPARK_GRAFT_BENCH_REPS times
   * (default 3) and report the median wall, with all rep walls kept in
   * the metrics entry for adjudication.
@@ -93,8 +93,7 @@ object Bench {
     * covers whatever is heavy NOW without hand-maintaining a list.
     * All rep walls stay in the metrics entry for adjudication.
     */
-  private val repWallThreshold = sys.env.get("SPARK_GRAFT_BENCH_REP_WALL")
-    .flatMap(_.toDoubleOption).getOrElse(3.0)
+  private val repWallThreshold = 3.0
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `xor(a, b)`            → bitwise xor (Spark's `^` operator; DuckDB
   *    reserves `^` for exponentiation, so oracles write xor())
   *
-  * `SqlRegistrySweepSpec` exercises all of them by running the whole
+  * `QueryRegistrySpec` exercises all of them by running the whole
   * DuckDB oracle corpus through Spark SQL.
   */
 object DialectShims {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.DecimalType
 /** Iterative graph traversal — the general recursive-query surface.
   *
   * Spark 4.1's recursive CTEs support only UNION ALL, which diverges on
-  * cyclic graphs (the limitation named in SqlRegistrySweepSpec), so the
+  * cyclic graphs (the limitation named in the tests' SqlBridge), so the
   * fixpoint shape that a warehouse writes as `WITH RECURSIVE` is provided
   * here as a library operator instead: level-synchronous multi-source BFS
   * over an edge frame. Connected components (ConnectedComponents.run) is

@@ -10,98 +10,11 @@ import org.apache.spark.sql.functions.{col, count, sum}
 /** Physical-plan audits: the scale properties the engine claims are
   * asserted here, so a regression (lost pushdown, accidental cartesian,
   * un-broadcast dimension) fails CI instead of surfacing as a 100×
-  * slowdown on a real cluster.
+  * slowdown on a real cluster. The every-query audit (no cartesian
+  * product, no unlisted nested-loop join) runs in QueryRegistrySpec's
+  * registry pass, on the same DataFrame it executes.
   */
 class PlanAuditSpec extends SparkSpec {
-
-  // Queries that intentionally use a broadcast nested-loop / cross join:
-  // a broadcast 1-row scalar (watermark, corpus size, query vector), or
-  // sim_ann_ivf's K-row seed-centroid frame (every IVF assignment scores
-  // each row against all K centroids; K is conf-bounded, not data-sized).
-  // The build side is provably tiny in each.
-  private val allowNestedLoop = Set(
-    "ref_watermark_filter", "text_tfidf", "sim_topk_cosine",
-    // K-row broadcast centroid / sub-codebook / lookup-table frames
-    "curate_domain_mix", "sim_ann_ivf", "sim_ann_index", "sim_ann_pq",
-    "sim_ann_ivfpq", "sim_ann_recall_gate",
-    // 1-row broadcast scalar frames (candidate array / total count /
-    // stage counts / probe embedding) — the watermark-filter pattern,
-    // not a data-path BNLJ
-    "agg_heavy_hitters", "win_funnel", "sim_hybrid_rrf",
-    // 1-row broadcast node count reaching the rank recurrence as a
-    // scalar — the watermark-filter pattern again
-    "graph_pagerank",
-    // 1-row broadcast corpus size + total-token count / min-max scalars
-    // (text_collocations' lift denominator, sim_matryoshka_topk's query
-    // vector — both the watermark-filter pattern)
-    "text_bm25", "stats_histogram", "text_collocations",
-    "sim_matryoshka_topk",
-    // 50-row top-token frame + 1-row corpus total, both broadcast
-    "stats_chisq_sources",
-    // 1-row corpus-total broadcast under the 200-row coverage frame
-    "text_vocab_coverage",
-    // 1-row broadcast stats frames (corpus totals / budget scalars)
-    "text_search_index", "text_search_chunks", "curate_mixture_epochs",
-    "curate_global_shuffle",
-    // 1-row broadcast scalars: KS totals/max-deviation frames, theta
-    // threshold, |languages|-row quota frame — watermark-filter pattern
-    "stats_ks_drift", "agg_kmv_setops", "curate_temperature_mix",
-    // 1-row broadcast edge-count scalar under the community frame
-    "graph_modularity",
-    // 1-row broadcast vocabulary scalar (add-1 smoothing denominator)
-    "text_perplexity",
-    // 1-row broadcast smoothed-totals / corpus-n scalars
-    "stats_psi_drift", "stats_mutual_info",
-    // 1-row broadcast query vector + the ≤20-row candidate pairwise
-    // self-join (non-equi by design: k² on a CONSTANT k, never corpus)
-    "sim_mmr_diversify",
-    // 1-row broadcast rank-1 frequency scalar under the 4 anchor rows
-    "text_zipf_slope",
-    // 1-row broadcast merge-winner frames under the re-segmentation
-    "text_bpe_merges",
-    "text_bpe_encode",
-    // 1-row broadcast order-count scalar under the lift computation
-    "mine_assoc_rules",
-    // 3-row broadcast query-vector frame (the sim_topk_cosine pattern)
-    "sim_range_search",
-    // K-row broadcast centroid frame (the sim_ann_index pattern)
-    "sim_ann_range_index",
-    // two 1-row arm frames meeting in a broadcast cross join
-    "stats_ab_test",
-    // |classes|-row broadcast model-constant frame + two 1-row scalars
-    // (the K-row centroid pattern)
-    "ml_naive_bayes",
-    // four 1-row broadcast max-normalization scalars — the pagerank
-    // node-count pattern
-    "graph_hits",
-    // three 1-row count frames meeting in broadcast cross joins
-    "dedup_minhash_eval",
-    // 5-row driver-built weight frame × 1-row holdout-metrics scalar
-    "ml_logreg",
-    // same 5-row weight-frame × 1-row metrics shape
-    "ml_perceptron",
-    // same shape closed-form: 3-row weight frame × 1-row SSE metrics
-    "ml_ridge",
-    // 1-row corpus-total broadcast under the 16-row block frame
-    "stats_jackknife_ci",
-    // 1-row broadcast corpus-total under the metadata-sized class frame
-    "curate_k_anonymity",
-    // same shape: totals/cluster-stats/removed-chars 1-row frames
-    "dedup_savings",
-    // T-row driver-built rule frame × 1-row MSE-metrics scalar (the
-    // ml_logreg weight-frame shape)
-    "ml_gbt_stumps")
-
-  for (q <- SparkEntry.all) {
-    test(s"${q.name}: no cartesian product${if (allowNestedLoop(q.name)) "" else ", no nested-loop join"}") {
-      val plan = q.fn(spark, sfTiny).queryExecution.sparkPlan.toString
-      assert(!plan.contains("CartesianProduct"),
-        s"${q.name} plans a cartesian product")
-      if (!allowNestedLoop(q.name))
-        assert(!plan.contains("BroadcastNestedLoopJoin"),
-          s"${q.name} plans a nested-loop join")
-    }
-  }
 
   test("top-k queries use per-partition heaps (TakeOrderedAndProject)") {
     Seq("ref_topk_newest", "ref_topk_oldest").foreach { name =>

@@ -1,13 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-
-/** Full-registry SQL-surface sweep: every registry query whose oracle SQL
-  * can be expressed in Spark SQL is executed as LITERAL SQL over the
-  * `GraftCatalog` views and must return exactly the DataFrame operator's
-  * rows. This pins that a SQL-only client (the reference's MLapp path,
-  * SURVEY §2.5) gets the same answers as the DataFrame API across the
-  * whole surface, not just the three reference queries.
+/** The DuckDB→Spark SQL bridge: turns a registry query's DuckDB oracle
+  * into literal Spark SQL over the `GraftCatalog` views, so
+  * `QueryRegistrySpec` can pin that a SQL-only client (the reference's
+  * MLapp path, SURVEY §2.5) gets the same answers as the DataFrame API
+  * across the whole surface, not just the three reference queries.
   *
   * The oracle strings are written for DuckDB; `toSparkSql` bridges the
   * dialect gap mechanically — function renames, `//`→`div`, aggregate
@@ -20,11 +17,11 @@ import org.apache.spark.sql.DataFrame
   * through the same Catalyst pipeline as any user query.
   *
   * Queries whose oracles lean on DuckDB features with no Spark spelling
-  * at all go in `dialectExceptions` with the blocking feature named; the
-  * sweep asserts those stay a small minority of the oracle-backed
-  * registry.
+  * at all go in `dialectExceptions` with the blocking feature named;
+  * `QueryRegistrySpec` asserts those stay a small minority of the
+  * oracle-backed registry.
   */
-class SqlRegistrySweepSpec extends SparkSpec {
+object SqlBridge {
 
   /** Mechanical DuckDB→Spark function renames (word-anchored). */
   private val renames: Seq[(String, String)] = Seq(
@@ -44,7 +41,7 @@ class SqlRegistrySweepSpec extends SparkSpec {
     "unnest"             -> "explode",
     "encode"             -> "duck_encode")
 
-  private[graft] def toSparkSql(duck: String): String = {
+  def toSparkSql(duck: String): String = {
     var s = duck
     // aggregate FILTER shorthand: DuckDB allows FILTER (cond); Spark
     // needs FILTER (WHERE cond). Protect already-explicit WHERE first.
@@ -122,7 +119,7 @@ class SqlRegistrySweepSpec extends SparkSpec {
     * before the bracket) become `array('a', 'b')`. String literals are
     * skipped; brackets inside them (regex classes) are never touched.
     */
-  private def rewriteBrackets(sql: String): String = {
+  private[graft] def rewriteBrackets(sql: String): String = {
     val s = sql
     var i = 0
     var inStr = false
@@ -203,7 +200,7 @@ class SqlRegistrySweepSpec extends SparkSpec {
   /** Hand-spelled Spark SQL for oracles whose DuckDB text resists the
     * mechanical bridge; still full literal-SQL result parity.
     */
-  private val sparkSqlOverrides: Map[String, String] = Map(
+  val sparkSqlOverrides: Map[String, String] = Map(
     // the DuckDB oracle spells the per-round re-segmentation as a
     // positional recursive CTE; Spark CANNOT run that chain — it has no
     // MATERIALIZED hint, so round N's recursion re-executes rounds
@@ -519,7 +516,7 @@ class SqlRegistrySweepSpec extends SparkSpec {
   /** Oracle-backed queries with no Spark SQL spelling; the blocking
     * dialect feature is named. Must stay a small minority.
     */
-  private val dialectExceptions: Map[String, String] = Map(
+  val dialectExceptions: Map[String, String] = Map(
     "dedup_clusters" ->
       ("recursive CTE fixpoint uses UNION (distinct) for cycle " +
         "termination; Spark 4.1 recursive CTEs support only UNION ALL, " +
@@ -533,142 +530,4 @@ class SqlRegistrySweepSpec extends SparkSpec {
     "graph_reach" ->
       ("the oracle IS a WITH RECURSIVE UNION-distinct walk (the operator " +
         "exists precisely because Spark 4.1 cannot run it as SQL)"))
-
-  private def canon(df: DataFrame): Seq[String] = {
-    val cols = df.columns.sorted.toSeq
-    df.selectExpr(cols.map(c => s"`$c`"): _*)
-      .collect()
-      .map(r => r.toSeq.map {
-        case null          => "NULL"
-        case d: Double     => if (d == math.rint(d)) f"$d%.1f" else d.toString
-        case f: Float      => f.toString
-        case b: Array[Byte] => java.util.Base64.getEncoder.encodeToString(b)
-        case s: scala.collection.Seq[_] => s.mkString("[", ",", "]")
-        case x             => x.toString
-      }.mkString("|"))
-      .sorted
-      .toSeq
-  }
-
-  test("registry oracles run as literal Spark SQL and match the operators") {
-    GraftCatalog.registerViews(spark, sfTiny)
-    // Cache the tiny catalog views EAGERLY (r12): the unrolled-oracle
-    // spellings (ml_kmeans = 3 rounds × ~5 back-references per round)
-    // make Catalyst's stats visitor walk thousands of relation leaves,
-    // and HadoopFsRelation.sizeInBytes re-lists files on every call
-    // (PartitioningAwareFileIndex.allFiles() is a def, not a val) —
-    // thread dumps of the r11/r12 suite showed 800+ CPU-seconds of
-    // single-threaded planning inside ONE query's stats walk. An
-    // InMemoryRelation leaf answers stats in O(1); at sf0.001 the whole
-    // cache is a few MB. Test-harness-only: no query path caches.
-    GraftCatalog.tables.foreach { case (name, _) =>
-      spark.catalog.cacheTable(name)
-      spark.table(name).count()
-    }
-    val oracleBacked = SparkEntry.all.filter(_.oracle.isDefined)
-    assert(oracleBacked.nonEmpty)
-
-    val unknown = (dialectExceptions.keySet ++ sparkSqlOverrides.keySet) --
-      oracleBacked.map(_.name).toSet
-    assert(unknown.isEmpty, s"names not in oracle-backed registry: $unknown")
-
-    // dev loop: GRAFT_SWEEP_ONLY="a,b" restricts the sweep (never set in CI)
-    val devOnly = sys.env.get("GRAFT_SWEEP_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val swept = oracleBacked
-      .filterNot(q => dialectExceptions.contains(q.name))
-      .filter(q => devOnly.isEmpty || devOnly(q.name))
-    val failures = scala.collection.mutable.ListBuffer.empty[String]
-
-    // DuckDB string literals are raw (standard SQL); Spark's default
-    // C-style escape parsing would silently corrupt regex literals
-    // ('[ \t\f]+' loses the backslashes), so parse like DuckDB does
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
-    // AQE off for the sweep window (r12): the sweep pins VALUE parity
-    // of the SQL dialect surface at sf0.001, where adaptivity buys
-    // nothing — and AQE re-optimizes the LOGICAL plan once per
-    // materialized query stage (AdaptiveSparkPlanExec.
-    // replaceWithQueryStagesInLogicalPlan), which on unrolled-
-    // recurrence oracles is O(stages × inlined-tree): Spark replaces
-    // every multi-consumer CTE ref with a copy of its subtree
-    // (ReplaceCTERefWithRepartition), so ml_kmeans' 3-round spelling
-    // inlines to ~8^4 subtree copies and its SQL side alone burned
-    // 800+ CPU-seconds (>15 min wall) in those re-walks. Execution
-    // plans are not what this suite tests; values are unchanged.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // The sweep runs on a THREAD POOL (r12, guide §2.6 "overlap
-    // independent jobs" applied to the suite): 221 independent
-    // queries × (plan + execute at sf0.001) were serialized on one
-    // thread, and the wall is dominated by DRIVER-side planning, which
-    // parallelizes perfectly across queries. Safety: Materialize.scoped
-    // is thread-local by design (concurrent runners are its documented
-    // contract), per-query temp views/scratch dirs are name-unique, and
-    // the escapedStringLiterals window spans the whole sweep exactly as
-    // before. 8 threads ≈ the planning-parallelism sweet spot at the
-    // test session's local[4].
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      val tasks = swept.map { q =>
-        pool.submit(new java.util.concurrent.Callable[Option[String]] {
-          override def call(): Option[String] = {
-            val sql = sparkSqlOverrides.getOrElse(q.name, toSparkSql(q.oracle.get))
-            val outcome =
-              try Materialize.scoped {
-                // DataFrame side first: sink/source roundtrips stage files
-                // the read-back depends on
-                val viaDf  = canon(q.fn(spark, sfTiny))
-                val viaSql = canon(spark.sql(sql))
-                if (viaSql == viaDf) None
-                else Some(s"${q.name}: MISMATCH sql=${viaSql.size} rows, " +
-                  s"df=${viaDf.size} rows; first diff: " +
-                  viaSql.zipAll(viaDf, "<missing>", "<missing>")
-                    .find { case (a, b) => a != b }
-                    .map { case (a, b) => s"sql[$a] df[$b]" }.getOrElse("?"))
-              } catch {
-                case e: Exception =>
-                  Some(s"${q.name}: ${e.getClass.getSimpleName} " +
-                    e.getMessage.linesIterator.take(2).mkString(" / ").take(300))
-              }
-            // streamed to sbt stdout so long runs are observable
-            println(s"[sweep] ${q.name}: ${outcome.fold("ok")(_ => "FAIL")}")
-            outcome
-          }
-        })
-      }
-      tasks.foreach(t => t.get().foreach(f => failures.synchronized(failures += f)))
-    } finally {
-      pool.shutdown()
-      spark.conf.unset("spark.sql.parser.escapedStringLiterals")
-      spark.conf.unset("spark.sql.adaptive.enabled")
-    }
-
-    assert(failures.isEmpty,
-      s"${failures.size}/${swept.size} swept queries failed:\n" +
-        failures.mkString("\n"))
-
-    assert(dialectExceptions.size * 10 <= oracleBacked.size,
-      s"dialect exceptions (${dialectExceptions.size}) must stay under 10% " +
-        s"of oracle-backed queries (${oracleBacked.size})")
-  }
-
-  test("text-level bridge rewrites never touch string literals") {
-    assert(toSparkSql("SELECT encode(x) AS a, 'please encode//this' AS b FROM t")
-      == "SELECT duck_encode(x) AS a, 'please encode//this' AS b FROM t")
-    assert(toSparkSql("SELECT 'http://x' AS u, n // 2 AS h FROM t")
-      == "SELECT 'http://x' AS u, n  div  2 AS h FROM t")
-    assert(toSparkSql("SELECT 'a::VARCHAR unnest' AS s FROM t")
-      == "SELECT 'a::VARCHAR unnest' AS s FROM t")
-  }
-
-  test("bracket scanner: 1-based index, slice, literal, regex-class safety") {
-    assert(rewriteBrackets("SELECT toks[2] FROM t") ==
-      "SELECT try_element_at(toks, 2) FROM t")
-    assert(rewriteBrackets("f(x)[1:3]") == "slice(f(x), 1, (3) - (1) + 1)")
-    assert(rewriteBrackets("a.embedding[i]") == "try_element_at(a.embedding, i)")
-    assert(rewriteBrackets("x IN ['a', 'b']") == "x IN array('a', 'b')")
-    assert(rewriteBrackets("regexp_like(t, '[a-z]+[0-9]')") ==
-      "regexp_like(t, '[a-z]+[0-9]')")
-    assert(rewriteBrackets("split(t, ' ')[i:i+2]") ==
-      "slice(split(t, ' '), i, (i+2) - (i) + 1)")
-  }
 }
